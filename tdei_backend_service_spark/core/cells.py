@@ -162,10 +162,13 @@ def _part1by1_expr(v):
     codegen CSE keeps it cheap; measured 2.7x faster than the Arrow UDF
     for ingest), but NEVER use the result as a join key or in a column a
     join consumes: inferred isnotnull filters re-inline the full tree
-    and the join stage slows ~10x (measured at 16M rows). Join-side
-    encodes stay on the nondeterministic pandas UDFs for that reason.
-    (A 1-element-transform 'let' avoids the blowup but drops the whole
-    projection out of codegen — measured 2x slower than this form.)"""
+    and the join stage slows ~10x (measured at 16M rows). A join key
+    that only has to be equal where the cells are equal does not need
+    the Morton order: the packed ``(x << depth) | y`` grid key of
+    operators/union_dataset._grid_key_cover is a small Catalyst tree
+    and needs no Python worker. (A 1-element-transform 'let' avoids the
+    blowup but drops the whole projection out of codegen — measured 2x
+    slower than this form.)"""
     from pyspark.sql import functions as F
     masks = [0x5555555555555555, 0x3333333333333333, 0x0F0F0F0F0F0F0F0F,
              0x00FF00FF00FF00FF, 0x0000FFFF0000FFFF]
@@ -185,6 +188,22 @@ def xy_expr(lon, lat, depth: int):
     x = F.floor(F.least(F.greatest(fx, F.lit(0.0)), F.lit(float(n) - 0.5)))
     y = F.floor(F.least(F.greatest(fy, F.lit(0.0)), F.lit(float(n) - 0.5)))
     return x, y
+
+
+def xy_sql(lon: str, lat: str, depth: int) -> tuple[str, str]:
+    """SQL text of xy_expr's (x, y) for column names or SQL expressions
+    ``lon``/``lat`` — the same IEEE op sequence as lonlat_to_xy, with
+    every literal a double (``D``). One F.expr parse costs one py4j
+    call; the same tree built from Column functions costs ~50, which
+    operators that build grid keys on every call pay in plan
+    construction."""
+    n = float(1 << depth)
+
+    def axis(v: str, off: float, span: float) -> str:
+        return (f"floor(least(greatest(({v} + {off!r}D) / {span!r}D"
+                f" * {n!r}D, 0.0D), {n - 0.5!r}D))")
+
+    return axis(lon, 180.0, 360.0), axis(lat, 90.0, 180.0)
 
 
 def encode_expr(lon, lat, depth: int):

@@ -15,8 +15,9 @@ Scale shape (the plan you'd run at 100 TB):
   cross an exchange;
 * candidates come from the radius-derived cell grid (depth chosen so a
   padded window spans <= 2 cells per axis — cover completeness per
-  operators/union_dataset._cell_cover_udfs), so pair generation is an
-  equi-join on cell, never all-pairs;
+  operators/union_dataset._grid_key_cover), so pair generation is an
+  equi-join on cell, never all-pairs; the cell keys are Catalyst
+  expressions, so no Python worker runs after the decode;
 * the hamming verify is JVM ``bit_count(xor)`` and runs INSIDE the join
   condition, before the pair distinct — non-matching candidates die in
   whole-stage codegen without materializing;
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..codecs.image import ahash64, decode_image, encode_image
 from ..core import cells
-from .union_dataset import _cell_cover_udfs
+from .union_dataset import _grid_key_cover
 
 _KEYED_SCHEMA_FMT = "{pk} {pk_type}, phash long, lon double, lat double"
 
@@ -474,13 +475,13 @@ def geo_visual_losers(keyed: DataFrame, radius_m: float, max_hamming: int,
         keyed = keyed.persist()
         own_caches.append(keyed)
 
-    _cell_once, _cover_once = _cell_cover_udfs(radius_m)
+    cell_of, cover_of = _grid_key_cover(radius_m)
     left = (keyed.withColumn("cell", F.explode(
-                _cover_once(F.col("lon"), F.col("lat"))))
+                cover_of("lon", "lat")))
             .select(F.col(pk).alias("l_pk"), F.col("phash").alias("l_ph"),
                     F.col("lon").alias("l_lon"), F.col("lat").alias("l_lat"),
                     "cell"))
-    right = (keyed.withColumn("cell", _cell_once(F.col("lon"), F.col("lat")))
+    right = (keyed.withColumn("cell", cell_of("lon", "lat"))
              .select(F.col(pk).alias("r_pk"), F.col("phash").alias("r_ph"),
                      F.col("lon").alias("r_lon"), F.col("lat").alias("r_lat"),
                      "cell"))
@@ -519,15 +520,15 @@ def incremental_geo_visual(batch: DataFrame, corpus: DataFrame,
     from ..pipeline.dedup import _finalize_losers
 
     keyed_b = decode_phash_points(batch, pk).persist()
-    _cell_once, _cover_once = _cell_cover_udfs(radius_m)
+    cell_of, cover_of = _grid_key_cover(radius_m)
 
     left = (keyed_b.withColumn("cell", F.explode(
-                _cover_once(F.col("lon"), F.col("lat"))))
+                cover_of("lon", "lat")))
             .select(F.col(pk).alias("l_pk"), F.col("phash").alias("l_ph"),
                     F.col("lon").alias("l_lon"), F.col("lat").alias("l_lat"),
                     "cell"))
     right = (corpus.select("phash", "lon", "lat")
-             .withColumn("cell", _cell_once(F.col("lon"), F.col("lat")))
+             .withColumn("cell", cell_of("lon", "lat"))
              .select(F.col("phash").alias("r_ph"),
                      F.col("lon").alias("r_lon"), F.col("lat").alias("r_lat"),
                      "cell"))

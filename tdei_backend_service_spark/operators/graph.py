@@ -81,6 +81,14 @@ _GRAPH_LOCAL_MAX_EDGES = int(os.environ.get(
     "TDEI_GRAPH_LOCAL_MAX_EDGES", str(2_000_000)))
 
 
+def _seed_nodes(seeds: DataFrame, node: str) -> DataFrame:
+    """Seed ids as a long ``_n`` column, NULLs dropped: a NULL seed
+    reaches nothing, and both the local folds (which cannot hold a NULL
+    in an int64 array) and the distributed layer 0 read this relation."""
+    return (seeds.select(F.col(node).cast("long").alias("_n"))
+            .filter(F.col("_n").isNotNull()))
+
+
 def _hop_distance_local(sym: DataFrame, seeds: DataFrame, max_hops: int,
                         node: str) -> DataFrame:
     """Single-task BFS over the probed-small symmetric edge relation:
@@ -151,12 +159,10 @@ def hop_distance(edges: DataFrame, seeds: DataFrame, max_hops: int,
         raise InputException("max_hops must be a non-negative integer")
     sym = (_symmetrize(edges, src, dst, directed)
            .distinct().localCheckpoint())
-    if sym.count() <= _GRAPH_LOCAL_MAX_EDGES:
-        return _hop_distance_local(
-            sym, seeds.select(F.col(node).cast("long").alias("_n")),
-            max_hops, node)
-    layer0 = (seeds.select(F.col(node).cast("long").alias("_n"))
-              .distinct().localCheckpoint())
+    seeds = _seed_nodes(seeds, node)
+    if _GRAPH_LOCAL_MAX_EDGES > 0 and sym.count() <= _GRAPH_LOCAL_MAX_EDGES:
+        return _hop_distance_local(sym, seeds, max_hops, node)
+    layer0 = seeds.distinct().localCheckpoint()
     layers = [layer0.select(F.col("_n"), F.lit(0).alias("hops"))]
     frontier, prev = layer0, None
     visited = layer0 if directed else None
@@ -262,12 +268,10 @@ def network_distance(edges: DataFrame, seeds: DataFrame, max_rounds: int,
     sym = (_symmetrize(edges, src, dst, directed,
                        extra=[F.col(weight).cast("long").alias("_w")])
            .localCheckpoint())
-    if sym.count() <= _GRAPH_LOCAL_MAX_EDGES:
-        return _network_distance_local(
-            sym, seeds.select(F.col(node).cast("long").alias("_n")),
-            max_rounds, node)
-    dist = (seeds.select(F.col(node).cast("long").alias("_n"))
-            .distinct()
+    seeds = _seed_nodes(seeds, node)
+    if _GRAPH_LOCAL_MAX_EDGES > 0 and sym.count() <= _GRAPH_LOCAL_MAX_EDGES:
+        return _network_distance_local(sym, seeds, max_rounds, node)
+    dist = (seeds.distinct()
             .select("_n", F.lit(0).cast("long").alias("_dist"))
             .localCheckpoint())
     for _ in range(max_rounds):
@@ -389,7 +393,8 @@ def pagerank(edges: DataFrame, n_iter: int,
                       F.col(dst).cast("long").alias("_d"))
          .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
          .distinct().localCheckpoint())
-    local = e.count() <= _GRAPH_LOCAL_MAX_EDGES
+    local = (_GRAPH_LOCAL_MAX_EDGES > 0
+             and e.count() <= _GRAPH_LOCAL_MAX_EDGES)
     nodes = (e.select(F.col("_s").alias("_n"))
              .unionAll(e.select(F.col("_d").alias("_n")))
              .distinct().localCheckpoint())
@@ -562,7 +567,7 @@ def kcore(edges: DataFrame, k: int, src: str = "orig_node_id",
                         F.greatest(s, d).alias("_b"))
            .filter(F.col("_a").isNotNull() & (F.col("_a") != F.col("_b")))
            .distinct().localCheckpoint())
-    if cur.count() <= _GRAPH_LOCAL_MAX_EDGES:
+    if _GRAPH_LOCAL_MAX_EDGES > 0 and cur.count() <= _GRAPH_LOCAL_MAX_EDGES:
         return _kcore_local(cur, k, max_rounds, node)
     for _ in range(max_rounds):
         deg = (cur.select(F.col("_a").alias("_n"))

@@ -568,7 +568,7 @@ def co_location(pings: DataFrame, *, radius_m: float = 100.0,
 
     Candidates come from an equi-join on (cell, time-bucket): one side
     carries its exact cell (union_dataset's padded-cover machinery,
-    operators/union_dataset._cell_cover_udfs — completeness proven
+    operators/union_dataset._grid_key_cover — completeness proven
     there), the other explodes its padded 4-corner cover x the bucket
     triple {b-1, b, b+1} (bucket width = window, so a qualifying pair
     can differ by at most one bucket). Exact refine: integer |dt| and
@@ -585,9 +585,9 @@ def co_location(pings: DataFrame, *, radius_m: float = 100.0,
     O(k^2) candidates — inherent to encounter semantics (the OUTPUT is
     quadratic in co-located density), so pick the radius/window the
     analysis needs, not larger."""
-    from .union_dataset import _cell_cover_udfs
+    from .union_dataset import _grid_key_cover
     lat0, coslat = _metric(metric_lat)
-    cell_udf, cover_udf = _cell_cover_udfs(float(radius_m), lat0)
+    cell_of, cover_of = _grid_key_cover(float(radius_m), lat0)
     radius_mm = int(round(float(radius_m) * 1000.0))
     w_us = int(window_s) * 1_000_000
     us = _us(pings, ts_col)
@@ -599,14 +599,14 @@ def co_location(pings: DataFrame, *, radius_m: float = 100.0,
             # integer DIV, not float division: a float-rounded bucket at
             # an exact boundary would break the +-1 bucket completeness
             .withColumn("_bkt", F.expr(f"_us DIV {w_us}")))
-    a = (base.withColumn("_cells", cover_udf(F.col("_lon"), F.col("_lat")))
+    a = (base.withColumn("_cells", cover_of("_lon", "_lat"))
          .withColumn("_jcell", F.explode("_cells")).drop("_cells")
          .withColumn("_jbkt", F.explode(F.array(
              F.col("_bkt") - 1, F.col("_bkt"), F.col("_bkt") + 1)))
          .select(F.col("_k").alias("_ka"), F.col("_id").alias("_ida"),
                  F.col("_lon").alias("_lona"), F.col("_lat").alias("_lata"),
                  F.col("_us").alias("_usa"), "_jcell", "_jbkt"))
-    b = (base.withColumn("_cell", cell_udf(F.col("_lon"), F.col("_lat")))
+    b = (base.withColumn("_cell", cell_of("_lon", "_lat"))
          .select(F.col("_k").alias("_kb"), F.col("_id").alias("_idb"),
                  F.col("_lon").alias("_lonb"), F.col("_lat").alias("_latb"),
                  F.col("_us").alias("_usb"), "_cell", "_bkt"))

@@ -30,7 +30,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import cells
@@ -39,12 +38,16 @@ from ..core.compiler import InputException
 DEFAULT_PROXIMITY_M = 0.5
 
 
-def _cell_cover_udfs(proximity: float, lat0: float = 0.0):
-    """(cell, padded-cover) Arrow UDFs for a proximity radius — the
-    candidate machinery union_dataset and incremental_union_dataset
-    share. ``lat0`` != 0 opts into the cos(lat) local metric (same
-    contract as spatial_join/tag_road): the lon pad widens by 1/cos
-    and the depth choice checks both axes in local meters.
+def _grid_key_cover(proximity: float, lat0: float = 0.0):
+    """(cell, padded-cover) Column builders for a proximity radius —
+    the candidate machinery union_dataset, incremental_union_dataset,
+    co_location, geo_visual and the curation leak audit share. Each
+    maps the lon and lat column names to a Column: the packed grid key
+    ``(x << depth) | y`` (cell) or the keys of the padded window
+    (cover). The keys only ever join with keys from this helper at the
+    same depth; no caller stores them. ``lat0`` != 0 opts into the cos(lat) local
+    metric (same contract as spatial_join/tag_road): the lon pad widens
+    by 1/cos and the depth choice checks both axes in local meters.
 
     Depth from 2*proximity: the 4-corner cover is complete only when the
     padded window (width 2*pad) spans <= 2 cells per axis, i.e. cell
@@ -56,17 +59,20 @@ def _cell_cover_udfs(proximity: float, lat0: float = 0.0):
     Lower bound 1 (not the usual r5 prefix): only clipping the depth
     DOWN preserves the extent guarantee.
 
-    Arrow UDFs, not cells.encode_expr: cell is the join key here, and
-    inferred join filters re-inline a Catalyst encode's exponential
-    tree (~10x stage slowdown measured; see cells._part1by1_expr).
-    The padded cover is the distinct cells of the 4 padded corners —
-    valid because the depth choice guarantees cell extent >= 2*pad
-    PER AXIS (each axis pads by its own degree reach — the proximity
-    disk's bbox is [lon +- pad_lon] x [lat +- pad_lat]; a shared
-    max-pad would overflow the lat half-extent once the local metric
-    inflates the lon pad), so the padded bbox spans at most 2 cells
-    per axis and the corners land in every spanned cell (incl. the
-    point's own)."""
+    Catalyst expressions, not Arrow UDFs: the grid is cells.xy_sql's
+    floor/clip (the SQL text of cells.xy_expr, == cells.lonlat_to_xy),
+    and the key is a shift and an OR of it — a small tree, unlike the
+    Morton interleave of cells.encode_expr, so the isnotnull filters
+    Catalyst infers on a join key stay cheap, and no Python worker
+    runs. As SQL text each key is one py4j call to build, not ~50,
+    which union jobs pay on every dispatch. The padded cover is the
+    distinct keys of the 4 padded corners — valid because the depth
+    choice guarantees cell extent >= 2*pad PER AXIS (each axis pads by
+    its own degree reach — the proximity disk's bbox is
+    [lon +- pad_lon] x [lat +- pad_lat]; a shared max-pad would
+    overflow the lat half-extent once the local metric inflates the
+    lon pad), so the padded bbox spans at most 2 cells per axis and
+    the corners land in every spanned cell (incl. the point's own)."""
     depth = int(np.clip(cells.depth_for_radius_m(2.0 * max(proximity, 0.5),
                                                  lat0), 1, 23))
     pad_lon = cells.meters_to_deg_lon(proximity, lat0)
@@ -78,22 +84,20 @@ def _cell_cover_udfs(proximity: float, lat0: float = 0.0):
             f"({180.0 / (1 << depth)}, {90.0 / (1 << depth)}) at depth "
             f"{depth} — the 4-corner cover would miss candidate cells")
 
-    @F.pandas_udf("long")
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cells.encode(lon.to_numpy(np.float64),
-                                      lat.to_numpy(np.float64), depth))
+    def key_sql(lon: str, lat: str) -> str:
+        x, y = cells.xy_sql(lon, lat, depth)
+        return f"shiftleft({x}, {depth}) | {y}"
 
-    @F.pandas_udf("array<long>")
-    def _cover(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        lo = lon.to_numpy(np.float64)
-        la = lat.to_numpy(np.float64)
-        corners = np.stack([cells.encode(lo + dx, la + dy, depth)
-                            for dx in (-pad_lon, pad_lon)
-                            for dy in (-pad_lat, pad_lat)])
-        return pd.Series([[int(v) for v in np.unique(corners[:, i])]
-                          for i in range(lo.size)])
+    def cell(lon: str, lat: str):
+        return F.expr(key_sql(lon, lat))
 
-    return _cell.asNondeterministic(), _cover.asNondeterministic()
+    def cover(lon: str, lat: str):
+        return F.expr("array_distinct(array(" + ", ".join(
+            key_sql(f"({lon} + {dx!r}D)", f"({lat} + {dy!r}D)")
+            for dx in (-pad_lon, pad_lon)
+            for dy in (-pad_lat, pad_lat)) + "))")
+
+    return cell, cover
 
 
 def union_dataset(df_one: DataFrame, dataset_id_one: str,
@@ -132,9 +136,17 @@ def union_dataset(df_one: DataFrame, dataset_id_one: str,
         raise InputException("proximity must be a number")
     proximity = float(proximity)
 
-    a = df_one.filter(F.col("dataset_id") == dataset_id_one)
-    b = df_two.filter(F.col("dataset_id") == dataset_id_two)
-    both = a.unionByName(b)
+    # One relation, one read: the service and the incremental self-union
+    # pass the same frame twice, and one filter for both ids reads it
+    # once instead of once per Union branch.
+    same = df_one is df_two or df_one.sameSemantics(df_two)
+    if same:
+        both = df_one.filter(
+            F.col("dataset_id").isin(dataset_id_one, dataset_id_two))
+    else:
+        both = (df_one.filter(F.col("dataset_id") == dataset_id_one)
+                .unionByName(
+                    df_two.filter(F.col("dataset_id") == dataset_id_two)))
     # unioning a dataset with itself (or overlapping inputs) duplicates
     # identical rows outright; collapse them before proximity dedup
     if dataset_id_one == dataset_id_two:
@@ -155,39 +167,39 @@ def union_dataset(df_one: DataFrame, dataset_id_one: str,
             F.col(pk).cast("string").alias("s")))
 
     lat0 = float(metric_lat) if metric_lat is not None else 0.0
-    _cell_once, _cover_once = _cell_cover_udfs(proximity, lat0)
-
+    cell_of, cover_of = _grid_key_cover(proximity, lat0)
     keys = [k for k in match_on if k in both.columns]
-    narrow = both.select(pk, *keys, "lon", "lat", "_rank")
-    left = (narrow.withColumn("cell", F.explode(_cover_once(F.col("lon"), F.col("lat"))))
-            .select(F.col(pk).alias("l_pk"),
-                    *[F.col(k).alias(f"l_{k}") for k in keys],
-                    F.col("lon").alias("l_lon"), F.col("lat").alias("l_lat"),
-                    F.col("_rank").alias("l_rank"), "cell"))
-    right = (narrow.withColumn("cell", _cell_once(F.col("lon"), F.col("lat")))
-             .select(F.col(pk).alias("r_pk"),
-                     *[F.col(k).alias(f"r_{k}") for k in keys],
-                     F.col("lon").alias("r_lon"), F.col("lat").alias("r_lat"),
-                     F.col("_rank").alias("r_rank"), "cell"))
+    left = both.select(*[F.col(k).alias(f"l_{k}") for k in keys],
+                       F.col("lon").alias("l_lon"), F.col("lat").alias("l_lat"),
+                       F.col("_rank").alias("l_rank"),
+                       F.explode(cover_of("lon", "lat")).alias("cell"))
+    right = both.select(*[F.col(k).alias(f"r_{k}") for k in keys],
+                        F.col("lon").alias("r_lon"), F.col("lat").alias("r_lat"),
+                        F.col("_rank").alias("r_rank"),
+                        cell_of("lon", "lat").alias("cell"))
 
     sx = cells.M_PER_DEG_LON_EQ * float(np.cos(np.radians(lat0)))
     sy = cells.M_PER_DEG_LAT
     cond = (left.cell == right.cell) & (left.l_rank > right.r_rank)
     for k in keys:
         cond = cond & (F.col(f"l_{k}") == F.col(f"r_{k}"))
-    pairs = (left.join(right, cond)  # each unordered matching pair once
-             .filter(
-                 F.sqrt(F.pow((F.col("l_lon") - F.col("r_lon")) * sx, 2)
-                        + F.pow((F.col("l_lat") - F.col("r_lat")) * sy, 2))
-                 <= proximity)
-             .select("l_rank", "r_rank").distinct())
+    matched = (left.join(right, cond)  # each unordered matching pair once
+               .filter(
+                   F.sqrt(F.pow((F.col("l_lon") - F.col("r_lon")) * sx, 2)
+                          + F.pow((F.col("l_lat") - F.col("r_lat")) * sy, 2))
+                   <= proximity))
 
     if collapse == "cc":
-        losers = _cc_losers(pairs)
+        losers = _cc_losers(matched.select("l_rank", "r_rank").distinct())
     else:
-        losers = pairs.select(F.col("l_rank").alias("_rank")).distinct()
+        losers = matched.select(F.col("l_rank").alias("_rank")).distinct()
 
-    return both.join(losers, ["_rank"], "left_anti").drop("_rank")
+    # Catalyst pushes a left_anti join through a Union (one candidate
+    # plan per branch) but not a left join, so mark the losers and keep
+    # the unmarked rows.
+    marked = losers.withColumn("_lost", F.lit(True))
+    return (both.join(marked, ["_rank"], "left")
+            .filter(F.col("_lost").isNull()).drop("_rank", "_lost"))
 
 
 def incremental_union_dataset(batch: DataFrame, corpus: DataFrame,
@@ -231,7 +243,7 @@ def incremental_union_dataset(batch: DataFrame, corpus: DataFrame,
     proximity = float(proximity)
 
     lat0 = float(metric_lat) if metric_lat is not None else 0.0
-    cell_u, cover_u = _cell_cover_udfs(proximity, lat0)
+    cell_of, cover_of = _grid_key_cover(proximity, lat0)
     keys = [k for k in match_on
             if k in batch.columns and k in corpus.columns]
     # persist the narrow batch projection: the cross path, the
@@ -241,13 +253,13 @@ def incremental_union_dataset(batch: DataFrame, corpus: DataFrame,
     # this cache collapsed every reference to one InMemoryRelation
     narrow = batch.select(pk, *keys, "lon", "lat").persist()
     b = (narrow
-         .withColumn("cell", F.explode(cover_u(F.col("lon"), F.col("lat"))))
+         .withColumn("cell", F.explode(cover_of("lon", "lat")))
          .select(F.col(pk),
                  *[F.col(k).alias(f"l_{k}") for k in keys],
                  F.col("lon").alias("l_lon"), F.col("lat").alias("l_lat"),
                  "cell"))
     c = (corpus.select(*keys, "lon", "lat")
-         .withColumn("cell", cell_u(F.col("lon"), F.col("lat")))
+         .withColumn("cell", cell_of("lon", "lat"))
          .select(*[F.col(k).alias(f"r_{k}") for k in keys],
                  F.col("lon").alias("r_lon"), F.col("lat").alias("r_lat"),
                  "cell"))
@@ -406,7 +418,7 @@ def _cc_labels(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
     # scale-adaptive collapse (guide §2: derive the plan from input
     # size, don't pay distributed-round latency on small graphs): the
     # count is a metadata-cheap job over the just-checkpointed blocks
-    if edges.count() <= _CC_LOCAL_MAX_EDGES:
+    if _CC_LOCAL_MAX_EDGES > 0 and edges.count() <= _CC_LOCAL_MAX_EDGES:
         if stats is not None:
             stats.setdefault("rss_mb", []).append(_driver_rss_mb())
             stats["rounds"] = stats.get("rounds", 0) + 1

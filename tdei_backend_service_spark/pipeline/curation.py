@@ -369,20 +369,20 @@ def split_leak_audit(df: DataFrame, split_col: str = "split",
     exact distance refine. Candidates are banded by cell + payload
     keys, never all-pairs; ``metric_lat`` opts into the cos(lat)
     local metric with the same contract as union_dataset."""
-    from ..operators.union_dataset import _cell_cover_udfs
+    from ..operators.union_dataset import _grid_key_cover
 
     lat0 = float(metric_lat) if metric_lat is not None else 0.0
-    cell_u, cover_u = _cell_cover_udfs(float(proximity), lat0)
+    cell_of, cover_of = _grid_key_cover(float(proximity), lat0)
     keys = [k for k in match_on if k in df.columns]
     narrow = df.select(pk, split_col, *keys, "lon", "lat")
     left = (narrow.withColumn("cell",
-                              F.explode(cover_u(F.col("lon"), F.col("lat"))))
+                              F.explode(cover_of("lon", "lat")))
             .select(F.col(pk).cast("string").alias("pk_a"),
                     F.col(split_col).alias("split_a"),
                     *[F.col(k).alias(f"l_{k}") for k in keys],
                     F.col("lon").alias("l_lon"), F.col("lat").alias("l_lat"),
                     "cell"))
-    right = (narrow.withColumn("cell", cell_u(F.col("lon"), F.col("lat")))
+    right = (narrow.withColumn("cell", cell_of("lon", "lat"))
              .select(F.col(pk).cast("string").alias("pk_b"),
                      F.col(split_col).alias("split_b"),
                      *[F.col(k).alias(f"r_{k}") for k in keys],

@@ -382,7 +382,9 @@ def _hash_pairs_local(sigs: DataFrame, id_col: str, max_hamming: int,
         for b in range(4):
             bucket = ((u >> np.uint64(16 * b))
                       & np.uint64(0xFFFF)).astype(np.int64)
-            order = np.lexsort((ids, bucket))
+            # ties on a repeated id order by hash, so a star bucket's
+            # anchor hash is the distributed plan's min((id, hash))
+            order = np.lexsort((hcs, ids, bucket))
             bs, si, sh = bucket[order], ids[order], hcs[order]
             starts = np.flatnonzero(np.r_[True, bs[1:] != bs[:-1]])
             sizes = np.r_[starts[1:], bs.size] - starts
@@ -414,7 +416,10 @@ def _hash_pairs_local(sigs: DataFrame, id_col: str, max_hamming: int,
             if li_parts:
                 li = np.concatenate(li_parts)
                 ri = np.concatenate(ri_parts)
-                ok = _popcount64(
+                # a repeated id never pairs with itself: the clique
+                # plan keeps l_id < r_id, the star drops the anchor id
+                ok = si[li] != si[ri]
+                ok &= _popcount64(
                     np.bitwise_xor(sh[li], sh[ri])) <= max_hamming
                 out_l.append(si[li][ok])
                 out_r.append(si[ri][ok])

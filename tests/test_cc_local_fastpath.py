@@ -67,3 +67,12 @@ def test_empty_pairs_both_paths(spark, monkeypatch):
     empty = spark.createDataFrame([], "l_rank long, r_rank long")
     local, dist = _both_paths(empty, monkeypatch)
     assert local == dist == []
+
+
+def test_bound_zero_routes_empty_pairs_distributed(spark, monkeypatch):
+    # bound 0 forces the distributed rounds, even for an empty graph
+    monkeypatch.setattr(U, "_CC_LOCAL_MAX_EDGES", 0)
+    empty = spark.createDataFrame([], "l_rank long, r_rank long")
+    stats = {}
+    assert _canon(U._cc_labels(empty, stats)) == []
+    assert "local" not in stats
