@@ -15,7 +15,7 @@ primitives in-engine:
 
 Scale shape (the part that matters at 10^12 edges): both are
 O(rounds) Spark jobs with ``localCheckpoint`` lineage cuts per round —
-the same discipline as union_dataset._cc_labels, without which the
+the same discipline as _cc_labels below, without which the
 logical plan grows geometrically and the driver dies analyzing round
 ~8. BFS keeps per-round state FRONTIER-LOCAL: for undirected graphs a
 layer-h node's neighbors sit in layers h-2..h, so the dedup anti-join
@@ -34,10 +34,9 @@ nothing (Bellman-Ford) terminates the loop, so ``max_hops`` /
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..core import route
 from ..exceptions import InputException
 
 __all__ = ["hop_distance", "network_distance", "triangle_count",
@@ -70,17 +69,6 @@ def _symmetrize(edges: DataFrame, src: str, dst: str,
                      F.col(src).cast("long").alias("_d"), *cols))
 
 
-#: Row bound for the single-task traversal fast path (optimization r7,
-#: guide §2: derive the plan from input size). An edge relation at or
-#: below this many rows runs the identical iterative algorithm inside
-#: ONE executor task on dense numpy arrays instead of paying
-#: per-round shuffle latency; larger graphs take the distributed
-#: rounds unchanged. Env-tunable for cluster profiles; set 0 to force
-#: the distributed path.
-_GRAPH_LOCAL_MAX_EDGES = int(os.environ.get(
-    "TDEI_GRAPH_LOCAL_MAX_EDGES", str(2_000_000)))
-
-
 def _seed_nodes(seeds: DataFrame, node: str) -> DataFrame:
     """Seed ids as a long ``_n`` column, NULLs dropped: a NULL seed
     reaches nothing, and both the local folds (which cannot hold a NULL
@@ -90,8 +78,9 @@ def _seed_nodes(seeds: DataFrame, node: str) -> DataFrame:
 
 
 def _hop_distance_local(sym: DataFrame, seeds: DataFrame, max_hops: int,
-                        node: str) -> DataFrame:
-    """Single-task BFS over the probed-small symmetric edge relation:
+                        node: str) -> DataFrame | None:
+    """Single-task BFS over a small symmetric edge relation
+    (core/route.single_task; None above the "graph_edges" bound):
     identical level semantics (hops = minimum traversal count, seeds at
     0, layers deduplicated), computed with boolean frontier masks. The
     seed relation rides along as tagged rows (``_d == _s``) so nothing
@@ -106,17 +95,9 @@ def _hop_distance_local(sym: DataFrame, seeds: DataFrame, max_hops: int,
     def fold(pdfs):
         import numpy as np
         import pandas as pd
-        es, ed, sd = [], [], []
-        for pdf in pdfs:
-            seed_mask = pdf["_seed"].to_numpy()
-            s = pdf["_s"].to_numpy(dtype=np.int64)
-            d = pdf["_d"].to_numpy(dtype=np.int64)
-            es.append(s[~seed_mask])
-            ed.append(d[~seed_mask])
-            sd.append(s[seed_mask])
-        s = np.concatenate(es) if es else np.empty(0, np.int64)
-        d = np.concatenate(ed) if ed else np.empty(0, np.int64)
-        q = np.concatenate(sd) if sd else np.empty(0, np.int64)
+        s, d, seed = route.int64_columns(pdfs, "_s", "_d", "_seed")
+        seed = seed.astype(bool)
+        s, d, q = s[~seed], d[~seed], s[seed]
         if q.size == 0:
             return
         nodes = np.unique(np.concatenate([s, d, q]))
@@ -139,7 +120,7 @@ def _hop_distance_local(sym: DataFrame, seeds: DataFrame, max_hops: int,
         yield pd.DataFrame({node: nodes[keep],
                             "hops": hops[keep].astype("int32")})
 
-    return tagged.coalesce(1).mapInPandas(fold, schema)
+    return route.single_task(tagged, "graph_edges", fold, schema, sym)
 
 
 def hop_distance(edges: DataFrame, seeds: DataFrame, max_hops: int,
@@ -160,8 +141,9 @@ def hop_distance(edges: DataFrame, seeds: DataFrame, max_hops: int,
     sym = (_symmetrize(edges, src, dst, directed)
            .distinct().localCheckpoint())
     seeds = _seed_nodes(seeds, node)
-    if _GRAPH_LOCAL_MAX_EDGES > 0 and sym.count() <= _GRAPH_LOCAL_MAX_EDGES:
-        return _hop_distance_local(sym, seeds, max_hops, node)
+    local = _hop_distance_local(sym, seeds, max_hops, node)
+    if local is not None:
+        return local
     layer0 = seeds.distinct().localCheckpoint()
     layers = [layer0.select(F.col("_n"), F.lit(0).alias("hops"))]
     frontier, prev = layer0, None
@@ -191,12 +173,13 @@ def hop_distance(edges: DataFrame, seeds: DataFrame, max_hops: int,
 
 
 def _network_distance_local(sym: DataFrame, seeds: DataFrame,
-                            max_rounds: int, node: str) -> DataFrame:
-    """Single-task synchronous Bellman-Ford over the probed-small
-    weighted edge relation: identical round semantics (dist after
-    round r = exact integer min over walks of <= r edges, early exit
-    when a round improves nothing), via ``np.minimum.at`` on int64
-    arrays. Seeds ride along as tagged zero-weight self rows."""
+                            max_rounds: int, node: str) -> DataFrame | None:
+    """Single-task synchronous Bellman-Ford over a small weighted edge
+    relation (core/route.single_task; None above the "graph_edges"
+    bound): identical round semantics (dist after round r = exact
+    integer min over walks of <= r edges, early exit when a round
+    improves nothing), via ``np.minimum.at`` on int64 arrays. Seeds
+    ride along as tagged zero-weight self rows."""
     tagged = (sym.select("_s", "_d", "_w", F.lit(False).alias("_seed"))
               .unionByName(seeds.select(F.col("_n").alias("_s"),
                                         F.col("_n").alias("_d"),
@@ -208,20 +191,9 @@ def _network_distance_local(sym: DataFrame, seeds: DataFrame,
     def fold(pdfs):
         import numpy as np
         import pandas as pd
-        es, ed, ew, sd = [], [], [], []
-        for pdf in pdfs:
-            seed_mask = pdf["_seed"].to_numpy()
-            s = pdf["_s"].to_numpy(dtype=np.int64)
-            d = pdf["_d"].to_numpy(dtype=np.int64)
-            w = pdf["_w"].to_numpy(dtype=np.int64)
-            es.append(s[~seed_mask])
-            ed.append(d[~seed_mask])
-            ew.append(w[~seed_mask])
-            sd.append(s[seed_mask])
-        s = np.concatenate(es) if es else np.empty(0, np.int64)
-        d = np.concatenate(ed) if ed else np.empty(0, np.int64)
-        w = np.concatenate(ew) if ew else np.empty(0, np.int64)
-        q = np.concatenate(sd) if sd else np.empty(0, np.int64)
+        s, d, w, seed = route.int64_columns(pdfs, "_s", "_d", "_w", "_seed")
+        seed = seed.astype(bool)
+        s, d, w, q = s[~seed], d[~seed], w[~seed], s[seed]
         if q.size == 0:
             return
         nodes = np.unique(np.concatenate([s, d, q]))
@@ -244,7 +216,7 @@ def _network_distance_local(sym: DataFrame, seeds: DataFrame,
         disc = dist < inf
         yield pd.DataFrame({node: nodes[disc], "dist": dist[disc]})
 
-    return tagged.coalesce(1).mapInPandas(fold, schema)
+    return route.single_task(tagged, "graph_edges", fold, schema, sym)
 
 
 def network_distance(edges: DataFrame, seeds: DataFrame, max_rounds: int,
@@ -269,8 +241,9 @@ def network_distance(edges: DataFrame, seeds: DataFrame, max_rounds: int,
                        extra=[F.col(weight).cast("long").alias("_w")])
            .localCheckpoint())
     seeds = _seed_nodes(seeds, node)
-    if _GRAPH_LOCAL_MAX_EDGES > 0 and sym.count() <= _GRAPH_LOCAL_MAX_EDGES:
-        return _network_distance_local(sym, seeds, max_rounds, node)
+    local = _network_distance_local(sym, seeds, max_rounds, node)
+    if local is not None:
+        return local
     dist = (seeds.distinct()
             .select("_n", F.lit(0).cast("long").alias("_dist"))
             .localCheckpoint())
@@ -393,15 +366,9 @@ def pagerank(edges: DataFrame, n_iter: int,
                       F.col(dst).cast("long").alias("_d"))
          .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
          .distinct().localCheckpoint())
-    local = (_GRAPH_LOCAL_MAX_EDGES > 0
-             and e.count() <= _GRAPH_LOCAL_MAX_EDGES)
     nodes = (e.select(F.col("_s").alias("_n"))
              .unionAll(e.select(F.col("_d").alias("_n")))
              .distinct().localCheckpoint())
-    ej = None
-    if not local:
-        ej = (e.join(e.groupBy("_s").agg(F.count("*").alias("_od")), "_s")
-              .localCheckpoint())
     # int64 envelope guard (ADVICE r5 low #1): the fixed-point update can
     # exceed int64 on funnel graphs (every node feeding one hub). Two
     # sound per-iteration caps, replayed as an exact Python-int scalar
@@ -424,38 +391,36 @@ def pagerank(edges: DataFrame, n_iter: int,
                 f"in-degree {max_indeg}, {n_iter} iterations overflow the "
                 f"fixed-point scale {PR_SCALE}; lower PR_SCALE or n_iter")
         r_max = base + (damping_num * in_sum_cap) // damping_den
-    if local:
-        # single-task iteration over the probed-small edge relation
-        # (guide §2): identical integer recurrence on dense arrays, the
-        # envelope guard above having already run driver-side
-        schema = T.StructType([T.StructField(node, T.LongType()),
-                               T.StructField("pr", T.LongType())])
-        iters, dnum, dden = n_iter, damping_num, damping_den
+    # single-task iteration over a small edge relation (guide §2,
+    # core/route.single_task): identical integer recurrence on dense
+    # arrays, the envelope guard above having already run driver-side
+    schema = T.StructType([T.StructField(node, T.LongType()),
+                           T.StructField("pr", T.LongType())])
+    iters, dnum, dden = n_iter, damping_num, damping_den
 
-        def fold(pdfs):
-            import numpy as np
-            import pandas as pd
-            ss, dd = [], []
-            for pdf in pdfs:
-                ss.append(pdf["_s"].to_numpy(dtype=np.int64))
-                dd.append(pdf["_d"].to_numpy(dtype=np.int64))
-            s = np.concatenate(ss) if ss else np.empty(0, np.int64)
-            d = np.concatenate(dd) if dd else np.empty(0, np.int64)
-            if s.size == 0:
-                return
-            nds = np.unique(np.concatenate([s, d]))
-            si = np.searchsorted(nds, s)
-            di = np.searchsorted(nds, d)
-            od = np.bincount(si, minlength=nds.size).astype(np.int64)
-            pr = np.full(nds.size, PR_SCALE, np.int64)
-            for _ in range(iters):
-                contrib = pr[si] // od[si]
-                in_sum = np.zeros(nds.size, np.int64)
-                np.add.at(in_sum, di, contrib)
-                pr = base + (dnum * in_sum) // dden
-            yield pd.DataFrame({node: nds, "pr": pr})
+    def fold(pdfs):
+        import numpy as np
+        import pandas as pd
+        s, d = route.int64_columns(pdfs, "_s", "_d")
+        if s.size == 0:
+            return
+        nds = np.unique(np.concatenate([s, d]))
+        si = np.searchsorted(nds, s)
+        di = np.searchsorted(nds, d)
+        od = np.bincount(si, minlength=nds.size).astype(np.int64)
+        pr = np.full(nds.size, PR_SCALE, np.int64)
+        for _ in range(iters):
+            contrib = pr[si] // od[si]
+            in_sum = np.zeros(nds.size, np.int64)
+            np.add.at(in_sum, di, contrib)
+            pr = base + (dnum * in_sum) // dden
+        yield pd.DataFrame({node: nds, "pr": pr})
 
-        return e.coalesce(1).mapInPandas(fold, schema)
+    local = route.single_task(e, "graph_edges", fold, schema)
+    if local is not None:
+        return local
+    ej = (e.join(e.groupBy("_s").agg(F.count("*").alias("_od")), "_s")
+          .localCheckpoint())
     ranks = nodes.select("_n", F.lit(PR_SCALE).cast("long").alias("_r"))
     for _ in range(n_iter):
         sums = (ranks.join(ej, ranks["_n"] == ej["_s"])
@@ -484,7 +449,7 @@ def connected_components(edges: DataFrame, src: str = "orig_node_id",
 
     This is the public face of the min-label propagation that already
     powers union_dataset(collapse='cc') and the cluster-dedup family
-    (union_dataset._cc_labels): each round combines neighbor-min with
+    (_cc_labels below): each round combines neighbor-min with
     pointer jumping (label-of-label), so the fixpoint arrives in
     O(log diameter) rounds with localCheckpoint lineage cuts — a
     10^12-edge graph pays O(log d) joins, never a per-node loop.
@@ -494,9 +459,8 @@ def connected_components(edges: DataFrame, src: str = "orig_node_id",
     by construction — there is no node table in the edge relation.
 
     ``stats``, if given, receives {"rounds": n, "rss_mb": [...]} — the
-    same probe contract as union_dataset._cc_labels.
+    same probe contract as _cc_labels.
     """
-    from .union_dataset import _cc_labels
     e = _symmetrize(edges, src, dst, directed=True)  # cast + NULL-drop;
     # _cc_labels symmetrizes internally, one direction suffices here
     labels = _cc_labels(
@@ -505,9 +469,185 @@ def connected_components(edges: DataFrame, src: str = "orig_node_id",
     return labels.select("node", F.col("label").alias("component"))
 
 
+def _driver_rss_mb() -> float:
+    """Current driver-process resident set (MiB) from /proc — the stress
+    harness charts this per cc round to prove localCheckpoint keeps the
+    logical plan (and thus driver heap) flat across iterations."""
+    try:
+        with open("/proc/self/status") as f:
+            for line in f:
+                if line.startswith("VmRSS:"):
+                    return round(int(line.split()[1]) / 1024, 1)
+    except OSError:
+        pass
+    return float("nan")
+
+
+def _cc_losers(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
+    """Non-minimum members of every connected component as (_rank)
+    rows — ``_cc_labels`` filtered to label != node (the component
+    minimum is always its own label)."""
+    labels = _cc_labels(pairs, stats)
+    return (labels.filter(F.col("label") != F.col("node"))
+            .select(F.col("node").alias("_rank")))
+
+
+def _cc_labels_local(edges: DataFrame) -> DataFrame | None:
+    """Single-task exact collapse of a SMALL match graph
+    (core/route.single_task; None above the "cc_edges" bound):
+    union-find with attach-under-minimum, so every root is its
+    component's minimum sort key — bit-identical to the distributed
+    min-label fixpoint, computed in one executor task with no driver
+    collect. Handles the same label domains as the distributed rounds
+    (numeric / string / struct sort keys; struct fields compare
+    field-wise with NULL ordered first, matching Spark's ordering)."""
+    dtype = edges.schema["a"].dataType
+    out_schema = T.StructType([T.StructField("node", dtype),
+                               T.StructField("label", dtype)])
+    names = ([f.name for f in dtype.fields]
+             if isinstance(dtype, T.StructType) else None)
+
+    def fold(pdfs):
+        import pandas as pd
+
+        def canon(v):
+            # struct rows arrive as dicts; tuples are hashable + ordered
+            return tuple(v[n] for n in names) if names is not None else v
+
+        def okey(v):
+            # Spark ordering: a NULL struct field sorts before any value
+            if names is None:
+                return v
+            return tuple((0,) if f is None else (1, f) for f in v)
+
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:
+                parent[x], x = root, parent[x]
+            return root
+
+        for pdf in pdfs:
+            for a, b in zip(pdf["a"], pdf["b"]):
+                a, b = canon(a), canon(b)
+                if a not in parent:
+                    parent[a] = a
+                if b not in parent:
+                    parent[b] = b
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    if okey(ra) <= okey(rb):
+                        parent[rb] = ra
+                    else:
+                        parent[ra] = rb
+        if parent:
+            nodes = list(parent)
+            labels = [find(n) for n in nodes]
+            if names is not None:
+                nodes = [dict(zip(names, n)) for n in nodes]
+                labels = [dict(zip(names, l)) for l in labels]
+            yield pd.DataFrame({"node": nodes, "label": labels})
+
+    return route.single_task(edges, "cc_edges", fold, out_schema)
+
+
+def _cc_labels(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
+    """Exact connected components by min-label propagation over the
+    match graph (nodes = the unique ``_rank`` sort keys). Returns a
+    (node, label) row per node that appears in ``pairs``, where label
+    is the component's minimum node id — the survivor-policy layer
+    (dedup keep_by) ranks members within each label group.
+
+    Each round combines neighbor-min propagation with pointer jumping
+    (label-of-label), so the fixpoint arrives in O(log diameter) rounds
+    — a 2^64-long chain would converge inside the 64-round cap. If the
+    cap is somehow hit without convergence, raise instead of silently
+    returning labels that would violate the documented one-survivor-per-
+    cluster contract (ADVICE r1, union_dataset.py:150).
+
+    ``stats``, if given, receives {"rounds": n, "rss_mb": [per-round
+    driver RSS]} so the stress harness (tools/cc_stress.py) can assert
+    O(log d) rounds and flat driver memory (VERDICT r3 next #4)."""
+    edges = (pairs.select(F.col("l_rank").alias("a"), F.col("r_rank").alias("b"))
+             .unionByName(pairs.select(F.col("r_rank").alias("a"),
+                                       F.col("l_rank").alias("b"))))
+    # localCheckpoint, not persist: each round's plan references
+    # `labels` three times, so without lineage truncation the logical
+    # plan grows 3^rounds and the driver OOMs while analyzing round ~8.
+    # Checkpointing materializes the rows AND cuts the plan — the same
+    # fix GraphFrames uses for iterative label propagation.
+    edges = edges.localCheckpoint()
+    # scale-adaptive collapse (guide §2: derive the plan from input
+    # size, don't pay distributed-round latency on small graphs): the
+    # count is a metadata-cheap job over the just-checkpointed blocks
+    local = _cc_labels_local(edges)
+    if local is not None:
+        if stats is not None:
+            stats.setdefault("rss_mb", []).append(_driver_rss_mb())
+            stats["rounds"] = stats.get("rounds", 0) + 1
+            stats["local"] = True
+        return local.localCheckpoint(eager=False)
+    labels = (edges.select(F.col("a").alias("node")).distinct()
+              .withColumn("label", F.col("node")).localCheckpoint())
+    # Round shape (optimization r7): ONE join + ONE partial-aggregated
+    # min exchange per round, over the union graph
+    #     edges ∪ (node -> label) ∪ (label -> node) ∪ (node -> node).
+    # min-label over that graph is simultaneously neighbor-min
+    # propagation, pointer jumping (label[label[a]] arrives via the
+    # node->label edge) and child-push (label-holders absorb their
+    # children's labels via the reversed edge), so it contracts at
+    # least as fast per round as the former 3-join plan while running
+    # a single shuffle pair. The tagged self-edge delivers each node's
+    # OWN previous label to its group, which both keeps the update
+    # monotone (new <= old) and lets the round detect convergence
+    # exactly — count(new != old) as a second tiny aggregate over the
+    # checkpointed round frame — replacing the former join + count
+    # job. Labels stay fully generic (numeric or struct sort keys).
+    # The lazy localCheckpoint is materialized by the convergence
+    # aggregate: one Spark job per round.
+    changed = 1
+    fwd = edges.withColumn("_self", F.lit(False))
+    for _ in range(64):
+        ptr = labels.select(F.col("node").alias("a"),
+                            F.col("label").alias("b"),
+                            F.lit(False).alias("_self"))
+        rev = labels.select(F.col("label").alias("a"),
+                            F.col("node").alias("b"),
+                            F.lit(False).alias("_self"))
+        own = labels.select(F.col("node").alias("a"),
+                            F.col("node").alias("b"),
+                            F.lit(True).alias("_self"))
+        rnd = (fwd.unionByName(ptr).unionByName(rev).unionByName(own)
+               .join(labels.withColumnRenamed("node", "b"), "b")
+               .groupBy("a")
+               .agg(F.min("label").alias("label"),
+                    F.min(F.when(F.col("_self"), F.col("label")))
+                    .alias("_old"))
+               .localCheckpoint(eager=False))
+        changed = int(rnd.agg(F.sum(
+            F.when(~F.col("label").eqNullSafe(F.col("_old")), 1).otherwise(0))
+        ).first()[0] or 0)
+        labels = rnd.select(F.col("a").alias("node"), "label")
+        if stats is not None:
+            stats.setdefault("rss_mb", []).append(_driver_rss_mb())
+            stats["rounds"] = stats.get("rounds", 0) + 1
+        if changed == 0:
+            break
+    if changed != 0:
+        raise RuntimeError(
+            "connected-component label propagation did not "
+            "converge within 64 rounds — refusing to return a partial "
+            "collapse (one-survivor-per-cluster contract)")
+    return labels
+
+
 def _kcore_local(cur: DataFrame, k: int, max_rounds: int,
-                 node: str) -> DataFrame:
-    """Single-task peeling over the probed-small canonical edge set:
+                 node: str) -> DataFrame | None:
+    """Single-task peeling over a small canonical edge set
+    (core/route.single_task; None above the "graph_edges" bound):
     identical fixpoint semantics (drop degree-<k nodes, induce, repeat;
     bounded by ``max_rounds``; final degree-filter pass), via bincount
     on remapped endpoints."""
@@ -516,12 +656,7 @@ def _kcore_local(cur: DataFrame, k: int, max_rounds: int,
     def fold(pdfs):
         import numpy as np
         import pandas as pd
-        aa, bb = [], []
-        for pdf in pdfs:
-            aa.append(pdf["_a"].to_numpy(dtype=np.int64))
-            bb.append(pdf["_b"].to_numpy(dtype=np.int64))
-        a = np.concatenate(aa) if aa else np.empty(0, np.int64)
-        b = np.concatenate(bb) if bb else np.empty(0, np.int64)
+        a, b = route.int64_columns(pdfs, "_a", "_b")
         if a.size == 0:
             return
         nodes = np.unique(np.concatenate([a, b]))
@@ -541,7 +676,7 @@ def _kcore_local(cur: DataFrame, k: int, max_rounds: int,
                + np.bincount(bi[alive], minlength=nodes.size))
         yield pd.DataFrame({node: nodes[deg >= k]})
 
-    return cur.coalesce(1).mapInPandas(fold, schema)
+    return route.single_task(cur, "graph_edges", fold, schema)
 
 
 def kcore(edges: DataFrame, k: int, src: str = "orig_node_id",
@@ -567,8 +702,9 @@ def kcore(edges: DataFrame, k: int, src: str = "orig_node_id",
                         F.greatest(s, d).alias("_b"))
            .filter(F.col("_a").isNotNull() & (F.col("_a") != F.col("_b")))
            .distinct().localCheckpoint())
-    if _GRAPH_LOCAL_MAX_EDGES > 0 and cur.count() <= _GRAPH_LOCAL_MAX_EDGES:
-        return _kcore_local(cur, k, max_rounds, node)
+    local = _kcore_local(cur, k, max_rounds, node)
+    if local is not None:
+        return local
     for _ in range(max_rounds):
         deg = (cur.select(F.col("_a").alias("_n"))
                .unionAll(cur.select(F.col("_b").alias("_n")))

@@ -80,12 +80,12 @@ def _cand_arrays_map_only(pings: DataFrame, edges: DataFrame,
     tag_road._tag_map_only probes) and emit per ping the edge ids and
     exact distances of EVERY edge within ``cutoff_m``, sorted by
     (dist, edge_id). Returns None when the edge side exceeds the
-    broadcast cover cap — callers fall back to the distributed join."""
-    from ..core import join as _J
-    cap = _J.BROADCAST_GEOM_MAX_ROWS
-    rows = edges.select("edge_id", "geometry").limit(cap + 1).collect()
-    if len(rows) > cap:
+    broadcast row or WKB byte bound (core/route.fits_broadcast) or the
+    cover cap — callers fall back to the distributed join."""
+    from ..core import join as _J, route
+    if not route.fits_broadcast(edges, "geom", F.length(F.col("geometry"))):
         return None
+    rows = edges.select("edge_id", "geometry").collect()
     wkbs = [bytes(r[1]) for r in rows]
     g = geom.parse_wkb_batch(wkbs)
     box = geom.geom_bbox(g)

@@ -27,13 +27,12 @@ other the min-winner and CC answers agree on cluster survivors.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import cells
 from ..core.compiler import InputException
+from .graph import _cc_losers
 
 DEFAULT_PROXIMITY_M = 0.5
 
@@ -289,190 +288,3 @@ def incremental_union_dataset(batch: DataFrame, corpus: DataFrame,
     from ..pipeline.dedup import _finalize_losers
     losers = _finalize_losers(losers, [narrow], release_cache)
     return batch.join(losers, pk, "left_anti")
-
-
-def _driver_rss_mb() -> float:
-    """Current driver-process resident set (MiB) from /proc — the stress
-    harness charts this per cc round to prove localCheckpoint keeps the
-    logical plan (and thus driver heap) flat across iterations."""
-    try:
-        with open("/proc/self/status") as f:
-            for line in f:
-                if line.startswith("VmRSS:"):
-                    return round(int(line.split()[1]) / 1024, 1)
-    except OSError:
-        pass
-    return float("nan")
-
-
-def _cc_losers(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
-    """Non-minimum members of every connected component as (_rank)
-    rows — ``_cc_labels`` filtered to label != node (the component
-    minimum is always its own label)."""
-    labels = _cc_labels(pairs, stats)
-    return (labels.filter(F.col("label") != F.col("node"))
-            .select(F.col("node").alias("_rank")))
-
-
-#: Row bound for the single-task component collapse: at or below this
-#: many symmetrized match edges the component graph is collapsed by one
-#: in-executor union-find pass (exact min-label, same fixpoint) instead
-#: of O(log d) distributed rounds — a candidate-pair graph of a few
-#: hundred thousand rows should not pay per-round shuffle latency.
-#: Parameterized for cluster tuning (set 0 to force the distributed
-#: path); above the bound the distributed rounds run unchanged.
-_CC_LOCAL_MAX_EDGES = int(os.environ.get(
-    "TDEI_CC_LOCAL_MAX_EDGES", str(2_000_000)))
-
-
-def _cc_labels_local(edges: DataFrame, stats: dict | None) -> DataFrame:
-    """Single-task exact collapse of a SMALL (row-probed) match graph:
-    union-find with attach-under-minimum, so every root is its
-    component's minimum sort key — bit-identical to the distributed
-    min-label fixpoint, computed in one executor task with no driver
-    collect. Handles the same label domains as the distributed rounds
-    (numeric / string / struct sort keys; struct fields compare
-    field-wise with NULL ordered first, matching Spark's ordering)."""
-    from pyspark.sql import types as T
-
-    dtype = edges.schema["a"].dataType
-    out_schema = T.StructType([T.StructField("node", dtype),
-                               T.StructField("label", dtype)])
-    names = ([f.name for f in dtype.fields]
-             if isinstance(dtype, T.StructType) else None)
-
-    def fold(pdfs):
-        import pandas as pd
-
-        def canon(v):
-            # struct rows arrive as dicts; tuples are hashable + ordered
-            return tuple(v[n] for n in names) if names is not None else v
-
-        def okey(v):
-            # Spark ordering: a NULL struct field sorts before any value
-            if names is None:
-                return v
-            return tuple((0,) if f is None else (1, f) for f in v)
-
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in pdfs:
-            for a, b in zip(pdf["a"], pdf["b"]):
-                a, b = canon(a), canon(b)
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if okey(ra) <= okey(rb):
-                        parent[rb] = ra
-                    else:
-                        parent[ra] = rb
-        if parent:
-            nodes = list(parent)
-            labels = [find(n) for n in nodes]
-            if names is not None:
-                nodes = [dict(zip(names, n)) for n in nodes]
-                labels = [dict(zip(names, l)) for l in labels]
-            yield pd.DataFrame({"node": nodes, "label": labels})
-
-    return (edges.coalesce(1).mapInPandas(fold, out_schema)
-            .localCheckpoint(eager=False))
-
-
-def _cc_labels(pairs: DataFrame, stats: dict | None = None) -> DataFrame:
-    """Exact connected components by min-label propagation over the
-    match graph (nodes = the unique ``_rank`` sort keys). Returns a
-    (node, label) row per node that appears in ``pairs``, where label
-    is the component's minimum node id — the survivor-policy layer
-    (dedup keep_by) ranks members within each label group.
-
-    Each round combines neighbor-min propagation with pointer jumping
-    (label-of-label), so the fixpoint arrives in O(log diameter) rounds
-    — a 2^64-long chain would converge inside the 64-round cap. If the
-    cap is somehow hit without convergence, raise instead of silently
-    returning labels that would violate the documented one-survivor-per-
-    cluster contract (ADVICE r1, union_dataset.py:150).
-
-    ``stats``, if given, receives {"rounds": n, "rss_mb": [per-round
-    driver RSS]} so the stress harness (tools/cc_stress.py) can assert
-    O(log d) rounds and flat driver memory (VERDICT r3 next #4)."""
-    edges = (pairs.select(F.col("l_rank").alias("a"), F.col("r_rank").alias("b"))
-             .unionByName(pairs.select(F.col("r_rank").alias("a"),
-                                       F.col("l_rank").alias("b"))))
-    # localCheckpoint, not persist: each round's plan references
-    # `labels` three times, so without lineage truncation the logical
-    # plan grows 3^rounds and the driver OOMs while analyzing round ~8.
-    # Checkpointing materializes the rows AND cuts the plan — the same
-    # fix GraphFrames uses for iterative label propagation.
-    edges = edges.localCheckpoint()
-    # scale-adaptive collapse (guide §2: derive the plan from input
-    # size, don't pay distributed-round latency on small graphs): the
-    # count is a metadata-cheap job over the just-checkpointed blocks
-    if _CC_LOCAL_MAX_EDGES > 0 and edges.count() <= _CC_LOCAL_MAX_EDGES:
-        if stats is not None:
-            stats.setdefault("rss_mb", []).append(_driver_rss_mb())
-            stats["rounds"] = stats.get("rounds", 0) + 1
-            stats["local"] = True
-        return _cc_labels_local(edges, stats)
-    labels = (edges.select(F.col("a").alias("node")).distinct()
-              .withColumn("label", F.col("node")).localCheckpoint())
-    # Round shape (optimization r7): ONE join + ONE partial-aggregated
-    # min exchange per round, over the union graph
-    #     edges ∪ (node -> label) ∪ (label -> node) ∪ (node -> node).
-    # min-label over that graph is simultaneously neighbor-min
-    # propagation, pointer jumping (label[label[a]] arrives via the
-    # node->label edge) and child-push (label-holders absorb their
-    # children's labels via the reversed edge), so it contracts at
-    # least as fast per round as the former 3-join plan while running
-    # a single shuffle pair. The tagged self-edge delivers each node's
-    # OWN previous label to its group, which both keeps the update
-    # monotone (new <= old) and lets the round detect convergence
-    # exactly — count(new != old) as a second tiny aggregate over the
-    # checkpointed round frame — replacing the former join + count
-    # job. Labels stay fully generic (numeric or struct sort keys).
-    # The lazy localCheckpoint is materialized by the convergence
-    # aggregate: one Spark job per round.
-    changed = 1
-    fwd = edges.withColumn("_self", F.lit(False))
-    for _ in range(64):
-        ptr = labels.select(F.col("node").alias("a"),
-                            F.col("label").alias("b"),
-                            F.lit(False).alias("_self"))
-        rev = labels.select(F.col("label").alias("a"),
-                            F.col("node").alias("b"),
-                            F.lit(False).alias("_self"))
-        own = labels.select(F.col("node").alias("a"),
-                            F.col("node").alias("b"),
-                            F.lit(True).alias("_self"))
-        rnd = (fwd.unionByName(ptr).unionByName(rev).unionByName(own)
-               .join(labels.withColumnRenamed("node", "b"), "b")
-               .groupBy("a")
-               .agg(F.min("label").alias("label"),
-                    F.min(F.when(F.col("_self"), F.col("label")))
-                    .alias("_old"))
-               .localCheckpoint(eager=False))
-        changed = int(rnd.agg(F.sum(
-            F.when(~F.col("label").eqNullSafe(F.col("_old")), 1).otherwise(0))
-        ).first()[0] or 0)
-        labels = rnd.select(F.col("a").alias("node"), "label")
-        if stats is not None:
-            stats.setdefault("rss_mb", []).append(_driver_rss_mb())
-            stats["rounds"] = stats.get("rounds", 0) + 1
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            "union_dataset(collapse='cc') label propagation did not "
-            "converge within 64 rounds — refusing to return a partial "
-            "collapse (one-survivor-per-cluster contract)")
-    return labels

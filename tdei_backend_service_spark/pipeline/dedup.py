@@ -17,12 +17,11 @@ Scale design (the whole point at 10^12 rows):
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..core import route
 from .similarity import _dot, _norm
 
 _MERSENNE = np.uint64((1 << 61) - 1)
@@ -146,10 +145,6 @@ def _jaccard_verify_udf(shingle_k: int):
     return _jac
 
 
-BROADCAST_TEXTS_MAX_ROWS = 2_000_000
-BROADCAST_TEXTS_MAX_BYTES = 512 << 20  # est. corpus bytes gate (VERDICT r1 #7)
-
-
 def _finalize_losers(losers: DataFrame, caches: list[DataFrame],
                      release_cache: bool) -> DataFrame:
     """Bound cache lifetime (ADVICE r4): eagerly materialize the NARROW
@@ -223,24 +218,9 @@ def _minhash_losers(df: DataFrame, text_col: str, id_col: str,
                           bands, rows_per_band)
 
     if broadcast_texts is None:
-        # bounded probe instead of a full count over a possibly-huge
-        # corpus; additionally byte-bounded so 2M long documents can't
-        # blow the driver heap even when the row cap passes. Once the
-        # row probe passes the corpus is known small, so the byte bound
-        # is an EXACT length sum — a head-of-table estimate would
-        # underestimate size-skewed corpora (ADVICE r2 low #4)
-        # ONE bounded probe job (the core/join.py shape): scan at most
-        # cap+1 rows, counting and summing text lengths in the same
-        # aggregation — when the row cap passes, the limited frame IS
-        # the whole corpus, so the byte sum is exact
-        probe = (df.select(F.length(F.col(text_col)).alias("sz"))
-                 .limit(BROADCAST_TEXTS_MAX_ROWS + 1)
-                 .agg(F.count(F.lit(1)).alias("n"),
-                      F.sum("sz").alias("total"))
-                 .first())
-        broadcast_texts = (probe["n"] <= BROADCAST_TEXTS_MAX_ROWS
-                           and (probe["total"] or 0)
-                           <= BROADCAST_TEXTS_MAX_BYTES)
+        # rows AND text bytes bound the driver collect (VERDICT r1 #7)
+        broadcast_texts = route.fits_broadcast(
+            df, "text", F.length(F.col(text_col)))
 
     bcast = None
     if broadcast_texts:
@@ -336,19 +316,6 @@ def _banded16(sigs: DataFrame, cols: list[str]) -> DataFrame:
         .select(*cols, "_hc", "bb.band", "bb.bucket"))
 
 
-
-
-#: Row bound for the single-task banded-hamming candidate+verify fast
-#: path (optimization r7): at or below this many signature rows the
-#: band/bucket grouping, clique/star pair generation and the exact
-#: hamming verify run in ONE executor task on numpy arrays — the same
-#: pair multiset as the distributed plan, without its 4-5 sequential
-#: AQE stages. Larger inputs (or non-integer ids) keep the
-#: distributed plan unchanged. Env-tunable; 0 forces distributed.
-_HASH_PAIRS_LOCAL_MAX_ROWS = int(os.environ.get(
-    "TDEI_HASH_PAIRS_LOCAL_MAX_ROWS", str(200_000)))
-
-
 def _popcount64(x: np.ndarray) -> np.ndarray:
     """Per-element popcount of an int64/uint64 array (numpy < 2 has no
     bitwise_count): unpack to bits byte-wise and sum."""
@@ -357,8 +324,9 @@ def _popcount64(x: np.ndarray) -> np.ndarray:
 
 
 def _hash_pairs_local(sigs: DataFrame, id_col: str, max_hamming: int,
-                      bucket_cap: int) -> DataFrame:
-    """Single-task replica of the distributed banded-hamming pair plan:
+                      bucket_cap: int) -> DataFrame | None:
+    """Single-task replica of the distributed banded-hamming pair plan
+    (core/route.single_task; None above the row bound):
     per 16-bit band, bucket rows by the masked hash chunk (arithmetic
     vs logical shift is irrelevant under the 0xFFFF mask — identical
     to Spark's shiftright+mask), emit all-pairs (l<r) for buckets at
@@ -367,14 +335,7 @@ def _hash_pairs_local(sigs: DataFrame, id_col: str, max_hamming: int,
     distributed plan (duplicates across shared bands included)."""
 
     def fold(pdfs):
-        ids_l, hcs_l = [], []
-        for pdf in pdfs:
-            ids_l.append(pdf[id_col].to_numpy(dtype=np.int64))
-            hcs_l.append(pdf["_hc"].to_numpy(dtype=np.int64))
-        if not ids_l:
-            return
-        ids = np.concatenate(ids_l)
-        hcs = np.concatenate(hcs_l)
+        ids, hcs = route.int64_columns(pdfs, id_col, "_hc")
         if ids.size == 0:
             return
         u = hcs.astype(np.uint64)
@@ -429,7 +390,8 @@ def _hash_pairs_local(sigs: DataFrame, id_col: str, max_hamming: int,
             if l.size:
                 yield pd.DataFrame({"l_id": l, "r_id": r})
 
-    return sigs.coalesce(1).mapInPandas(fold, "l_id long, r_id long")
+    return route.single_task(sigs, "hash_pairs_rows", fold,
+                             "l_id long, r_id long")
 
 
 def _hash_pairs(df: DataFrame, hash_col: str, id_col: str,
@@ -461,20 +423,15 @@ def _hash_pairs(df: DataFrame, hash_col: str, id_col: str,
     if not already_cached:
         sigs = sigs.persist()
     cache = None if already_cached else sigs
-    # scale-adaptive pair stage (guide §2): bounded row probe routes
-    # small signature relations through the single-task kernel above;
-    # larger relations (or non-long ids) run the distributed plan below
-    if (_HASH_PAIRS_LOCAL_MAX_ROWS > 0
-            and dict(sigs.dtypes).get(id_col) == "bigint"
-            and sigs.limit(_HASH_PAIRS_LOCAL_MAX_ROWS + 1).count()
-            <= _HASH_PAIRS_LOCAL_MAX_ROWS):
-        # materialize the (row-bounded) cached relation IN PARALLEL
-        # before handing it to the single-task kernel — coalesce(1) on
-        # an unmaterialized plan would otherwise drag the upstream
-        # signature/decode work onto one core
-        sigs.count()
-        return (_hash_pairs_local(sigs, id_col, max_hamming, bucket_cap),
-                cache)
+    # scale-adaptive pair stage (guide §2): small signature relations
+    # with long ids run the single-task kernel above. Its exact count
+    # over the persisted relation both routes and fills the cache in
+    # parallel, so coalesce(1) never drags the upstream signature or
+    # decode work onto one core
+    if dict(sigs.dtypes).get(id_col) == "bigint":
+        local = _hash_pairs_local(sigs, id_col, max_hamming, bucket_cap)
+        if local is not None:
+            return local, cache
     banded = _banded16(sigs, [id_col])
     stats = banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("_n"),
@@ -520,7 +477,7 @@ def hash_neardup_losers(df: DataFrame, hash_col: str, id_col: str,
 def _cluster_losers_by_policy(df: DataFrame, pairs: DataFrame,
                               id_col: str, keep_by: str) -> DataFrame:
     """Loser ids under the keep-best survivor policy: label every
-    paired node with its connected component (operators/union_dataset.
+    paired node with its connected component (operators/graph.
     _cc_labels), then keep the member with the LARGEST ``keep_by``
     value per component (ties -> smallest id); everything else in the
     component loses. Rows in no pair are singletons and never appear.
@@ -530,7 +487,7 @@ def _cluster_losers_by_policy(df: DataFrame, pairs: DataFrame,
     ranks members. Components are candidate-generation-bounded (band
     pigeonhole + star caps), so no label group explodes."""
     from pyspark.sql.window import Window
-    from ..operators.union_dataset import _cc_labels
+    from ..operators.graph import _cc_labels
     labels = _cc_labels(pairs.select(F.col("l_id").alias("l_rank"),
                                      F.col("r_id").alias("r_rank")))
     member = df.select(id_col, keep_by).join(
@@ -562,7 +519,7 @@ def hash_cluster_dedup(df: DataFrame, hash_col: str, id_col: str,
     verify, star-capped hot buckets — under a star cap connectivity
     routes through the bucket's min-id anchor, the same recall trade
     hash_neardup makes); components by exact pointer-jumped min-label
-    propagation (operators.union_dataset._cc_losers, O(log diameter)
+    propagation (operators.graph._cc_losers, O(log diameter)
     rounds with localCheckpoint lineage cuts). The propagation is
     eager, so the signature cache this call created is released as
     soon as the loser labels are materialized.
@@ -573,7 +530,7 @@ def hash_cluster_dedup(df: DataFrame, hash_col: str, id_col: str,
     want when a quality score exists (keep the sharpest image / the
     highest-quality document of each drift chain), at the cost of one
     extra narrow join + window over the labeled members."""
-    from ..operators.union_dataset import _cc_losers
+    from ..operators.graph import _cc_losers
     pairs, cache = _hash_pairs(df, hash_col, id_col, max_hamming, bucket_cap)
     if keep_by is not None:
         losers = _cluster_losers_by_policy(df, pairs, id_col, keep_by)
@@ -949,7 +906,7 @@ def embedding_cluster_dedup(df: DataFrame, vec_col: str = "embedding",
     multiprobe); components by the exact pointer-jumped min-label
     propagation. The propagation is eager, so the keyed-vector cache
     is released as soon as the labels are materialized."""
-    from ..operators.union_dataset import _cc_losers
+    from ..operators.graph import _cc_losers
     H = _hyperplanes(df, vec_col, planes, bands, seed)
     if H is None:
         return df

@@ -8,23 +8,24 @@ proportional to the partition count, not the data, so the right number
 tracks peak keyed-state volume / throughput of the deployment, not the
 session-wide shuffle setting (which is sized for batch exchanges).
 
-``stream_state_partitions`` scopes the conf around a streaming run:
-``TDEI_STREAM_STATE_PARTITIONS`` sets the deployment's value (size it
-to keys x throughput on a real cluster — state stores shard per
-partition); the default of 8 keeps per-micro-batch commit overhead off
-the critical path for the keyed-state volumes the engine's streaming
-operators hold (counts / session ranges / seen-flags per key).
+``stream_state_partitions`` scopes the conf around a streaming run: 8
+partitions keep per-micro-batch commit overhead off the critical path
+for the keyed-state volumes the engine's streaming operators hold
+(counts / session ranges / seen-flags per key).
 """
 
 from __future__ import annotations
 
-import os
+import threading
 from contextlib import contextmanager
 
-#: default state-store partition count for the engine's streaming
-#: queries; override per deployment with TDEI_STREAM_STATE_PARTITIONS
-STREAM_STATE_PARTITIONS = int(os.environ.get(
-    "TDEI_STREAM_STATE_PARTITIONS", "8"))
+#: state-store partition count for the engine's streaming queries
+STREAM_STATE_PARTITIONS = 8
+
+# serializes the set/restore pairs: without it two runs can interleave
+# as A sets, B sets (saving A's pinned value as "old"), A restores,
+# B restores — leaving the pinned value in the session for good
+_CONF_LOCK = threading.RLock()
 
 
 @contextmanager
@@ -34,11 +35,16 @@ def stream_state_partitions(spark, n: int | None = None):
     duration of a synchronous streaming run, restoring the session
     value afterwards. A query restarted on an existing checkpoint keeps
     the checkpoint's partitioning — Spark ignores the conf then — so
-    wrapping restarts is harmless."""
+    wrapping restarts is harmless.
+
+    The conf is session-global: concurrent runs wait for each other
+    here, and batch queries planned on other threads while a run is
+    inside the block see the pinned value."""
     key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n or STREAM_STATE_PARTITIONS))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    with _CONF_LOCK:
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(n or STREAM_STATE_PARTITIONS))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)

@@ -9,7 +9,8 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-import tdei_backend_service_spark.operators.union_dataset as U
+import tdei_backend_service_spark.operators.graph as G
+from tdei_backend_service_spark.core import route
 
 STRUCT = "struct<ds:int,t:int,n:decimal(38,0),s:string>"
 
@@ -19,12 +20,12 @@ def _canon(df):
 
 
 def _both_paths(pairs, monkeypatch):
-    monkeypatch.setattr(U, "_CC_LOCAL_MAX_EDGES", 10**9)
+    monkeypatch.setitem(route.BOUNDS, "cc_edges", 10**9)
     local_stats = {}
-    local = _canon(U._cc_labels(pairs, local_stats))
-    monkeypatch.setattr(U, "_CC_LOCAL_MAX_EDGES", -1)
+    local = _canon(G._cc_labels(pairs, local_stats))
+    monkeypatch.setitem(route.BOUNDS, "cc_edges", -1)
     dist_stats = {}
-    dist = _canon(U._cc_labels(pairs, dist_stats))
+    dist = _canon(G._cc_labels(pairs, dist_stats))
     assert local_stats.get("local") is True
     assert "local" not in dist_stats
     return local, dist
@@ -55,10 +56,10 @@ def test_local_matches_distributed_struct_ranks(spark, monkeypatch):
 
 def test_local_path_chain_min_label(spark, monkeypatch):
     # a 0-1-2-...-49 chain must collapse to label 0 everywhere
-    monkeypatch.setattr(U, "_CC_LOCAL_MAX_EDGES", 10**9)
+    monkeypatch.setitem(route.BOUNDS, "cc_edges", 10**9)
     pairs = spark.createDataFrame([(i, i + 1) for i in range(49)],
                                   "l_rank long, r_rank long")
-    out = U._cc_labels(pairs).toPandas()
+    out = G._cc_labels(pairs).toPandas()
     assert len(out) == 50
     assert set(out["label"]) == {0}
 
@@ -71,8 +72,8 @@ def test_empty_pairs_both_paths(spark, monkeypatch):
 
 def test_bound_zero_routes_empty_pairs_distributed(spark, monkeypatch):
     # bound 0 forces the distributed rounds, even for an empty graph
-    monkeypatch.setattr(U, "_CC_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setitem(route.BOUNDS, "cc_edges", 0)
     empty = spark.createDataFrame([], "l_rank long, r_rank long")
     stats = {}
-    assert _canon(U._cc_labels(empty, stats)) == []
+    assert _canon(G._cc_labels(empty, stats)) == []
     assert "local" not in stats

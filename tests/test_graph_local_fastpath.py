@@ -8,6 +8,7 @@ import random
 import pytest
 
 import tdei_backend_service_spark.operators.graph as G
+from tdei_backend_service_spark.core import route
 
 
 def _canon(df):
@@ -32,9 +33,9 @@ def test_hop_and_network_distance_local_matches(spark, monkeypatch, directed):
         e, seeds = _rand_graph(spark, rng)
         hops = rng.randint(0, 10)
         for func in (G.hop_distance, G.network_distance):
-            monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", 10**9)
+            monkeypatch.setitem(route.BOUNDS, "graph_edges", 10**9)
             a = _canon(func(e, seeds, hops, directed=directed))
-            monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", -1)
+            monkeypatch.setitem(route.BOUNDS, "graph_edges", -1)
             b = _canon(func(e, seeds, hops, directed=directed))
             assert a == b, func.__name__
 
@@ -43,9 +44,9 @@ def test_kcore_local_matches(spark, monkeypatch):
     rng = random.Random(22)
     e, _ = _rand_graph(spark, rng)
     for k in (1, 2, 3):
-        monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", 10**9)
+        monkeypatch.setitem(route.BOUNDS, "graph_edges", 10**9)
         a = _canon(G.kcore(e, k=k))
-        monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", -1)
+        monkeypatch.setitem(route.BOUNDS, "graph_edges", -1)
         b = _canon(G.kcore(e, k=k))
         assert a == b
 
@@ -54,9 +55,9 @@ def test_pagerank_local_matches(spark, monkeypatch):
     rng = random.Random(23)
     for n_iter in (0, 3, 5):
         e, _ = _rand_graph(spark, rng)
-        monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", 10**9)
+        monkeypatch.setitem(route.BOUNDS, "graph_edges", 10**9)
         a = _canon(G.pagerank(e, n_iter=n_iter))
-        monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", -1)
+        monkeypatch.setitem(route.BOUNDS, "graph_edges", -1)
         b = _canon(G.pagerank(e, n_iter=n_iter))
         assert a == b
 
@@ -70,9 +71,9 @@ def test_null_seed_matches_on_both_paths(spark, monkeypatch, directed):
                               "orig_node_id long, dest_node_id long, w long")
     seeds = spark.createDataFrame([(1,), (None,)], "node long")
     for func in (G.hop_distance, G.network_distance):
-        monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", 10**9)
+        monkeypatch.setitem(route.BOUNDS, "graph_edges", 10**9)
         a = _canon(func(e, seeds, 5, directed=directed))
-        monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", 0)
+        monkeypatch.setitem(route.BOUNDS, "graph_edges", 0)
         b = _canon(func(e, seeds, 5, directed=directed))
         assert a == b, func.__name__
         assert [r[0] for r in a] == [1, 2, 3], func.__name__
@@ -82,19 +83,19 @@ def test_bound_zero_routes_empty_graph_distributed(spark, monkeypatch):
     """Bound 0 forces the distributed rounds even when the edge
     relation is empty (count 0 <= bound 0 used to pick the local
     kernels)."""
-    def no_local(*args, **kwargs):
-        raise AssertionError("local kernel taken at bound 0")
+    def no_kernel(df):
+        return "MapInPandas" not in \
+            df._jdf.queryExecution().executedPlan().toString()
 
-    monkeypatch.setattr(G, "_GRAPH_LOCAL_MAX_EDGES", 0)
-    monkeypatch.setattr(G, "_hop_distance_local", no_local)
-    monkeypatch.setattr(G, "_network_distance_local", no_local)
-    monkeypatch.setattr(G, "_kcore_local", no_local)
+    monkeypatch.setitem(route.BOUNDS, "graph_edges", 0)
     e = spark.createDataFrame([], "orig_node_id long, dest_node_id long, w long")
     seeds = spark.createDataFrame([(1,)], "node long")
-    assert _canon(G.hop_distance(e, seeds, 3)) == [(1, 0)]
-    assert _canon(G.network_distance(e, seeds, 3)) == [(1, 0)]
-    assert _canon(G.kcore(e, k=1)) == []
-    pr = G.pagerank(e, n_iter=2)  # its local kernel is an inline fold
-    assert "MapInPandas" not in \
-        pr._jdf.queryExecution().executedPlan().toString()
+    hops = G.hop_distance(e, seeds, 3)
+    dist = G.network_distance(e, seeds, 3)
+    core = G.kcore(e, k=1)
+    pr = G.pagerank(e, n_iter=2)
+    assert all(map(no_kernel, (hops, dist, core, pr)))
+    assert _canon(hops) == [(1, 0)]
+    assert _canon(dist) == [(1, 0)]
+    assert _canon(core) == []
     assert _canon(pr) == []

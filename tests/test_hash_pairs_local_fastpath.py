@@ -9,6 +9,7 @@ from collections import Counter
 import pytest
 
 import tdei_backend_service_spark.pipeline.dedup as DD
+from tdei_backend_service_spark.core import route
 
 
 def _fold(u):
@@ -17,7 +18,7 @@ def _fold(u):
 
 
 def _pairs(df, cap, monkeypatch, local):
-    monkeypatch.setattr(DD, "_HASH_PAIRS_LOCAL_MAX_ROWS",
+    monkeypatch.setitem(route.BOUNDS, "hash_pairs_rows",
                         10**9 if local else 0)
     pairs, cache = DD._hash_pairs(df, "phash", "image_id", 3, cap)
     out = Counter(map(tuple, pairs.collect()))
@@ -47,7 +48,7 @@ def test_local_pair_multiset_matches_distributed(spark, monkeypatch):
 
 def test_string_ids_stay_distributed(spark, monkeypatch):
     # non-long ids must not enter the numpy kernel
-    monkeypatch.setattr(DD, "_HASH_PAIRS_LOCAL_MAX_ROWS", 10**9)
+    monkeypatch.setitem(route.BOUNDS, "hash_pairs_rows", 10**9)
     df = spark.createDataFrame([("a", 5), ("b", 5)],
                                "image_id string, phash long")
     pairs, cache = DD._hash_pairs(df, "phash", "image_id", 3, 64)

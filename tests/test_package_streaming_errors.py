@@ -75,6 +75,45 @@ def test_streaming_ingest_batches(spark, tmp_path):
     assert sum(e["rows"] for e in lines) == 150
 
 
+def test_stream_state_partitions_restores_under_overlap(spark):
+    """Two runs overlapping as A enters, B tries to enter, A exits,
+    B exits: the session value must come back, not the pinned 8 that B
+    would read as "old" if it entered while A was inside."""
+    import threading
+
+    from tdei_backend_service_spark.streaming.state import \
+        stream_state_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    session = spark.conf.get(key)
+    spark.conf.set(key, "5")  # a value the block does not pin
+    a_in, a_go, b_in, b_go = (threading.Event() for _ in range(4))
+    errors = []
+
+    def run(entered, go):
+        try:
+            with stream_state_partitions(spark):
+                entered.set()
+                assert go.wait(10)
+        except Exception as e:  # surfaced in the main thread
+            errors.append(e)
+
+    a = threading.Thread(target=run, args=(a_in, a_go))
+    b = threading.Thread(target=run, args=(b_in, b_go))
+    a.start()
+    assert a_in.wait(10)
+    b.start()
+    b_in.wait(0.5)  # room for B to enter while A is inside, if it can
+    a_go.set()
+    a.join(10)
+    b_go.set()
+    b.join(10)
+    restored = spark.conf.get(key)
+    spark.conf.set(key, session)
+    assert not a.is_alive() and not b.is_alive() and not errors
+    assert restored == "5"
+
+
 def test_streaming_stateful_dedup(spark, tmp_path):
     """applyInPandasWithState first-seen dedup: in-batch dups collapse to
     the lowest id, cross-batch dups are dropped by keyed state, and the
@@ -375,7 +414,7 @@ def test_zone_membership_parity_and_bounds(spark):
     import pandas as pd
     from pyspark.sql import types as T
 
-    from tdei_backend_service_spark.core import cells, geom
+    from tdei_backend_service_spark.core import cells, geom, route
     from tdei_backend_service_spark.core.schema import ZONES_SCHEMA
     from tdei_backend_service_spark.exceptions import InputException
     from tdei_backend_service_spark.streaming import zones as Z
@@ -416,13 +455,13 @@ def test_zone_membership_parity_and_bounds(spark):
     assert got == want  # new path emits ids sorted; naive j-loop is sorted
 
     # (b) over-bound table refuses up front (monkeypatched row cap)
-    old = Z.BROADCAST_GEOM_MAX_ROWS
+    old = route.BOUNDS["zone_rows"]
     try:
-        Z.BROADCAST_GEOM_MAX_ROWS = n_zones - 1
+        route.BOUNDS["zone_rows"] = n_zones - 1
         with pytest.raises(InputException, match="broadcast bound"):
             Z.zone_membership_udf(spark, zdf, "pz")
     finally:
-        Z.BROADCAST_GEOM_MAX_ROWS = old
+        route.BOUNDS["zone_rows"] = old
 
     # (c) 10k disjoint zones on a grid: candidates per point stay O(1)
     side = 100  # 10_000 zones, each 0.008 deg in a 0.01-deg lattice

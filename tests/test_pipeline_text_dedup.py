@@ -3,6 +3,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tdei_backend_service_spark.core import route
 from tdei_backend_service_spark.pipeline import dedup as D
 from tdei_backend_service_spark.pipeline import text as X
 
@@ -210,7 +211,7 @@ def test_embedding_capped_bucket_recovered_by_second_band(spark):
 def test_minhash_byte_bound_chooses_join_path(spark, near_dups, monkeypatch):
     # with a tiny byte cap the broadcast path is rejected and the
     # id-join verify path must produce the identical answer
-    monkeypatch.setattr(D, "BROADCAST_TEXTS_MAX_BYTES", 64)
+    monkeypatch.setitem(route.BOUNDS, "text_bytes", 64)
     out = D.minhash_dedup(near_dups, threshold=0.7)
     assert sorted(r.doc_id for r in out.collect()) == [0, 3, 5]
 

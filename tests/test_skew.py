@@ -65,14 +65,14 @@ def test_auto_skew_picks_plan_from_histogram(spark, skewed, monkeypatch):
     selects the cell-split (Union) plan by itself, a uniform fixture
     keeps the plain single-join plan, and the auto plan's answer matches
     the plain plan exactly."""
-    from tdei_backend_service_spark.core import join as J
+    from tdei_backend_service_spark.core import route
     from tdei_backend_service_spark.core.compiler import compile_join_condition
     from tdei_backend_service_spark.core.join import GeomSide, two_phase_join
     from tdei_backend_service_spark.datagen import synth_edges_df, synth_images_df
 
     # force the distributed path: the fused/broadcast shortcuts would
     # answer before the skew decision is ever consulted
-    monkeypatch.setattr(J, "BROADCAST_GEOM_MAX_ROWS", 0)
+    monkeypatch.setitem(route.BOUNDS, "geom_rows", 0)
 
     edges = synth_edges_df(spark, 30)
     pred = compile_join_condition(

@@ -331,12 +331,12 @@ def test_property_random_vs_bruteforce(spark):
 def test_broadcast_geoms_byte_bounded(spark, monkeypatch):
     # fat WKB rows: the row cap passes but the byte estimate must refuse
     # the driver-side collect
-    from tdei_backend_service_spark.core import join as J
+    from tdei_backend_service_spark.core import join as J, route
     from tdei_backend_service_spark.datagen import synth_edges_df
     edges = synth_edges_df(spark, 50)
     side = J.GeomSide(df=edges, pk="edge_id", kind="line", geom_col="geometry")
     assert J._maybe_broadcast_geoms(side) is not None
-    monkeypatch.setattr(J, "BROADCAST_GEOM_MAX_BYTES", 100)
+    monkeypatch.setitem(route.BOUNDS, "geom_bytes", 100)
     assert J._maybe_broadcast_geoms(side) is None
 
 
@@ -410,7 +410,7 @@ def test_fused_probe_matches_join_path(spark, monkeypatch):
     """Differential (ADVICE r2 low #3): the fused zero-shuffle point
     probe must equal the two-phase join path row-for-row on a randomized
     fixture with polygon AND line targets plus carried source columns."""
-    from tdei_backend_service_spark.core import join as J
+    from tdei_backend_service_spark.core import route
     from tdei_backend_service_spark.datagen import (synth_edges_df,
                                                     synth_images_df,
                                                     synth_zones_df)
@@ -424,7 +424,7 @@ def test_fused_probe_matches_join_path(spark, monkeypatch):
         pred = "ST_DWithin(geometry_target, geometry_source, 150)"
         fused = spatial_join(targets, dim, dsid, imgs, "point", "ds-a",
                              pred, aggs).collect()
-        monkeypatch.setattr(J, "BROADCAST_GEOM_MAX_ROWS", 0)
+        monkeypatch.setitem(route.BOUNDS, "geom_rows", 0)
         joined = spatial_join(targets, dim, dsid, imgs, "point", "ds-a",
                               pred, aggs).collect()
         monkeypatch.undo()
@@ -557,7 +557,7 @@ def test_metric_lat_local_scaling_known_geometry(spark):
     the fused broadcast probe AND the distributed join (broadcast
     probe monkeypatched off via the row cap)."""
     from tdei_backend_service_spark.core import cells as C
-    from tdei_backend_service_spark.core import join as J
+    from tdei_backend_service_spark.core import route
     from tdei_backend_service_spark.core.schema import EDGES_SCHEMA
 
     lat = 47.6
@@ -597,13 +597,13 @@ def test_metric_lat_local_scaling_known_geometry(spark):
     assert n_matched(None) == 0
     assert n_matched(lat) == 1
     # distributed path (broadcast gated off): same answers
-    old = J.BROADCAST_GEOM_MAX_ROWS
+    old = route.BOUNDS["geom_rows"]
     try:
-        J.BROADCAST_GEOM_MAX_ROWS = 0
+        route.BOUNDS["geom_rows"] = 0
         assert n_matched(None) == 0
         assert n_matched(lat) == 1
     finally:
-        J.BROADCAST_GEOM_MAX_ROWS = old
+        route.BOUNDS["geom_rows"] = old
 
     # depth picker honors the lat axis takeover past ~60 deg
     assert C.depth_for_radius_m(100.0, 75.0) <= \

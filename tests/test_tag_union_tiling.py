@@ -260,7 +260,7 @@ def test_tag_road_map_only_matches_join_path(spark, monkeypatch):
     randomized fixture — same nearest ids, distances, grafted props."""
     import numpy as np
 
-    from tdei_backend_service_spark.core import join as J
+    from tdei_backend_service_spark.core import route
     from tdei_backend_service_spark.datagen import (synth_edges_df,
                                                     synth_images_df)
     imgs = synth_images_df(spark, 1500, with_bytes=False, dataset_id="ds-a")
@@ -268,7 +268,7 @@ def test_tag_road_map_only_matches_join_path(spark, monkeypatch):
     a = dataset_tag_road(imgs, "ds-a", edges, "ds-e",
                          attrs=["highway"], cutoff_m=120.0)
     rows_a = {r.image_id: r for r in a.collect()}
-    monkeypatch.setattr(J, "BROADCAST_GEOM_MAX_ROWS", 0)  # force join path
+    monkeypatch.setitem(route.BOUNDS, "geom_rows", 0)  # force join path
     b = dataset_tag_road(imgs, "ds-a", edges, "ds-e",
                          attrs=["highway"], cutoff_m=120.0)
     rows_b = {r.image_id: r for r in b.collect()}
@@ -620,7 +620,7 @@ def test_tag_road_metric_lat_winner_flip_all_paths(spark, monkeypatch):
     off), and ring expansion (deep cells force k_cover > 2); knn_join
     rank-1 must match too."""
     from tdei_backend_service_spark.core import cells as C
-    from tdei_backend_service_spark.core import join as J
+    from tdei_backend_service_spark.core import route
     from tdei_backend_service_spark.operators.tag_road import knn_join
 
     lat = 47.6
@@ -670,7 +670,7 @@ def test_tag_road_metric_lat_winner_flip_all_paths(spark, monkeypatch):
     check_equator(run(None))
     check_local(run(lat))
     # path 2: distributed one-candidate join
-    monkeypatch.setattr(J, "BROADCAST_GEOM_MAX_ROWS", 0)
+    monkeypatch.setitem(route.BOUNDS, "geom_rows", 0)
     check_equator(run(None))
     check_local(run(lat))
     # path 3: ring expansion (deep cells: cell_m << cutoff -> k_cover > 2)

@@ -8,7 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from tdei_backend_service_spark.core import cells, geom, join as J
+from tdei_backend_service_spark.core import cells, geom, route
 from tdei_backend_service_spark.core.schema import EDGES_SCHEMA, ZONES_SCHEMA
 from tdei_backend_service_spark.operators.trajectory import (
     coverage_gaps, map_match, od_matrix, trip_geo_stats)
@@ -101,20 +101,33 @@ def test_map_match_keep_within_must_not_exceed_cutoff(spark):
 
 
 def test_map_match_distributed_parity(spark, monkeypatch):
-    # forcing the cover cap to 0 rejects the broadcast path; the
-    # distributed candidate join must produce identical output
+    # a 0-row or a 64-byte broadcast bound (the five edges carry 205
+    # WKB bytes) rejects the broadcast path; the distributed candidate
+    # join must produce identical output
+    import tdei_backend_service_spark.operators.trajectory as TR
     lats = [47.0 + k * 0.002 for k in range(5)]
     edges = _edges(spark, lats)
     rows = [(i % 3, _ts(i), i, 0.3 + (i % 7) * 0.05,
              47.0 + ((i * 37) % 100) / 10_000.0) for i in range(60)]
     kw = dict(cutoff_m=400.0, keep_within_m=250.0)
     fast = _mm_rows(spark, rows, edges, **kw)
-    monkeypatch.setattr(J, "BROADCAST_GEOM_MAX_ROWS", 0)
-    slow = _mm_rows(spark, rows, edges, **kw)
-    assert fast.keys() == slow.keys()
-    for k in fast:
-        for c in ("nearest_edge_id", "matched_edge_id", "n_cand"):
-            assert fast[k][c] == slow[k][c], (k, c)
+    probe = TR._cand_arrays_map_only
+    for bound in (("geom_rows", 0), ("geom_bytes", 64)):
+        took = []
+
+        def spy(*args, **kwargs):
+            took.append(probe(*args, **kwargs))
+            return took[-1]
+
+        with monkeypatch.context() as m:
+            m.setitem(route.BOUNDS, *bound)
+            m.setattr(TR, "_cand_arrays_map_only", spy)
+            slow = _mm_rows(spark, rows, edges, **kw)
+        assert took == [None], bound
+        assert fast.keys() == slow.keys()
+        for k in fast:
+            for c in ("nearest_edge_id", "matched_edge_id", "n_cand"):
+                assert fast[k][c] == slow[k][c], (bound, k, c)
 
 
 # ---------------------------------------------------------------------------
@@ -536,7 +549,7 @@ def test_trajectory_metric_lat_flips(spark, monkeypatch):
 
     for patched in (False, True):
         if patched:
-            monkeypatch.setattr(J, "BROADCAST_GEOM_MAX_ROWS", 0)
+            monkeypatch.setitem(route.BOUNDS, "geom_rows", 0)
         eq = _mm_rows(spark, rows, vedge, cutoff_m=600.0)
         lc = _mm_rows(spark, rows, vedge, cutoff_m=600.0, metric_lat=lat)
         assert eq[10]["nearest_edge_id"] is None

@@ -34,7 +34,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from tdei_backend_service_spark.operators.union_dataset import _cc_losers
+    from tdei_backend_service_spark.operators.graph import _cc_losers
     from tdei_backend_service_spark.session import get_spark
 
     spark = get_spark("cc-stress", cpus=cpus)

@@ -2,10 +2,16 @@
 """Local replica of the driver's correctness gate: run every queries()
 entry on Spark AND its oracle_sql() on DuckDB at sf0.01, compare
 row-count + schema + order-insensitive values (columns sorted by name,
-rows sorted, exact equality — stricter than any hash)."""
+rows sorted, exact equality — stricter than any hash).
+
+Usage: check_oracle.py [sf_dir] [query,query,...] [--force-distributed]
+
+``--force-distributed`` zeroes every routing bound in core/route.py
+first, so each size-routed operator runs its distributed twin."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -13,8 +19,11 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+FORCE_DISTRIBUTED = "--force-distributed" in sys.argv
+if FORCE_DISTRIBUTED:
+    sys.argv.remove("--force-distributed")
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
@@ -32,7 +41,11 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> int:
     import __spark_entry__ as E
+    from tdei_backend_service_spark.core import route
     from tdei_backend_service_spark.session import get_spark
+
+    if FORCE_DISTRIBUTED:
+        route.force_distributed()
 
     spark = get_spark("oracle-check", cpus=8)
     con = duckdb.connect()
@@ -42,6 +55,7 @@ def main() -> int:
     qs = E.queries()
     oracles = E.oracle_sql()
     failures = []
+    t_all = time.time()
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
             continue
@@ -86,6 +100,8 @@ def main() -> int:
             failures.append((name, status))
 
     spark.stop()
+    print(f"\nwall {time.time() - t_all:.1f}s"
+          + (" (forced distributed)" if FORCE_DISTRIBUTED else ""))
     if failures:
         print(f"\nFAILED: {len(failures)}")
         for n, s in failures:

@@ -6,7 +6,7 @@ hot-cell deepening strata (core/join.py two_phase_join adaptive_skew)
 previously ran only at fixture scale. This job builds the adversarial
 case the strata exist for:
 
-  * a NON-broadcastable vector target (> BROADCAST_GEOM_MAX_ROWS edges,
+  * a NON-broadcastable vector target (> route.BOUNDS['geom_rows'] edges,
     so no geometry lookup, no fused probe — the real padded-cover cell
     join runs);
   * a point source with ~skew% of all rows landing in one city-core
@@ -40,13 +40,13 @@ N_EDGES = int(sys.argv[3]) if len(sys.argv) > 3 else 600_001
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from tdei_backend_service_spark.core import join as J
+    from tdei_backend_service_spark.core import join as J, route
     from tdei_backend_service_spark.datagen import (synth_edges_df,
                                                     synth_images_df)
     from tdei_backend_service_spark.operators.spatial_join import spatial_join
     from tdei_backend_service_spark.session import get_spark
 
-    assert N_EDGES > J.BROADCAST_GEOM_MAX_ROWS, \
+    assert N_EDGES > route.BOUNDS["geom_rows"], \
         "vector side must defeat the broadcast gate for this exercise"
 
     spark = get_spark("skew", cpus=CPUS, shuffle_partitions=CPUS * 2)
