@@ -1821,46 +1821,29 @@ def _q_streaming_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
     from pyspark.sql import types as T
 
-    from tdei_backend_service_spark.streaming.dedup import start_dedup_ingest
-    from tdei_backend_service_spark.streaming.state import \
-        stream_state_partitions
+    from tdei_backend_service_spark.streaming.dedup import run_dedup_ingest
     base = tempfile.mkdtemp(prefix="stream_dedup_q_")
     landing = os.path.join(base, "landing")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
     schema = T.StructType([T.StructField("doc_id", T.LongType()),
                            T.StructField("text", T.StringType())])
-    def _drain(q, what: str) -> None:
-        # confirm the availableNow run actually finished before touching
-        # the checkpoint again — a silent q.stop() here would read a
-        # partial sink or break the second start (ADVICE r3 low #3)
-        q.awaitTermination(240)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"streaming dedup {what} drop did not "
-                               f"drain within 240s")
-
     docs = (spark.read.parquet(f"{sf}/documents.parquet")
             .select(F.col("doc_id").cast("long").alias("doc_id"), "text"))
     # each drop lands as ONE file: the min-doc_id winner rule is
     # per-micro-batch, so a drop must not be chunked across batches
     docs.coalesce(1).write.mode("overwrite").parquet(landing)
-    # state partitions pinned for the query's lifetime at first start
-    # (streaming/state.py); the restart reuses the checkpoint's value
-    with stream_state_partitions(spark):
-        _drain(start_dedup_ingest(spark, landing, out, ckpt, schema),
-               "first")
-        dups = (docs.filter(F.col("doc_id") % 5 == 0)
-                .select((F.col("doc_id") + 1_000_000).alias("doc_id"),
-                        "text"))
-        fresh = (docs.filter(F.col("doc_id") % 11 == 0)
-                 .select((F.col("doc_id") + 3_000_000).alias("doc_id"),
-                         F.concat(F.col("text"), F.lit(" v2"))
-                         .alias("text")))
-        (dups.unionByName(fresh).coalesce(1)
-             .write.mode("append").parquet(landing))
-        _drain(start_dedup_ingest(spark, landing, out, ckpt, schema),
-               "second")
+    # each run drains before the next touches the checkpoint; the
+    # restart reuses the state partitioning of the first start
+    run_dedup_ingest(spark, landing, out, ckpt, schema, timeout_s=240)
+    dups = (docs.filter(F.col("doc_id") % 5 == 0)
+            .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text"))
+    fresh = (docs.filter(F.col("doc_id") % 11 == 0)
+             .select((F.col("doc_id") + 3_000_000).alias("doc_id"),
+                     F.concat(F.col("text"), F.lit(" v2")).alias("text")))
+    (dups.unionByName(fresh).coalesce(1)
+         .write.mode("append").parquet(landing))
+    run_dedup_ingest(spark, landing, out, ckpt, schema, timeout_s=240)
     return spark.read.parquet(out).select("doc_id")
 
 

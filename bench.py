@@ -2,7 +2,8 @@
 """Benchmark harness: headline spatial-join + tile-assignment suite.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on)
+and prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec}, "sf": ..., "rows_per_sec": ...}
 
@@ -22,7 +23,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _materialize(df) -> int:
@@ -34,7 +34,7 @@ def main() -> None:
     import __spark_entry__ as E
     from tdei_backend_service_spark.session import get_spark
 
-    spark = get_spark("tdei-bench", cpus=CPUS)
+    spark = get_spark("tdei-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = E.queries()
@@ -148,7 +148,7 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "rows_per_sec": round(spatial_rows / max(spatial_secs, 1e-9), 1),
-        "cpus": CPUS,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     # Full per-query JSON first + a sidecar file; the LAST line is a
     # compact summary (slowest 12 queries only) so a tail-capture of

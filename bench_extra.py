@@ -22,7 +22,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main() -> None:
@@ -35,7 +34,7 @@ def main() -> None:
     import __spark_entry__ as E
     from tdei_backend_service_spark.session import get_spark
 
-    spark = get_spark("tdei-bench-extra", cpus=CPUS)
+    spark = get_spark("tdei-bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
 

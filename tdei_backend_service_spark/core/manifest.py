@@ -92,12 +92,9 @@ class Manifest:
             ).drop(*[f"_k_{c}" for c in keys])
 
         t0 = time.time()
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (pending.write.mode("overwrite").partitionBy(*keys).parquet(out_dir))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (pending.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(*keys).parquet(out_dir))
         wall = time.time() - t0
 
         # per-partition metrics from the WRITTEN files, not a re-execution

@@ -3,7 +3,9 @@
 Centralizes the configuration the engine relies on: AQE (runtime
 re-planning + skew-join splitting), Arrow for pandas UDF transfer, and a
 shuffle-partition count sized to the local core count (on a real cluster
-this is set per-job from input size; AQE coalesces the excess).
+this is set per-job from input size; AQE coalesces the excess). The core
+count is ``cpus``, else ``$SPARK_GRAFT_CPUS``, else the CPUs this process
+may run on.
 """
 
 from __future__ import annotations
@@ -16,7 +18,8 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "tdei-spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+                   or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus) * 2, 8)
     return (

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .run import run_stream
+
 
 def streaming_exact_dedup(stream: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id",
@@ -84,19 +86,15 @@ def streaming_exact_dedup(stream: DataFrame, text_col: str = "text",
                                     "append", timeout))
 
 
-def start_dedup_ingest(spark, landing_dir: str, out_dir: str,
-                       checkpoint_dir: str, schema: T.StructType,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       trigger_once: bool = True):
-    """Wire the stateful dedup between a parquet landing stream and an
-    append-only parquet sink. Exactly-once per micro-batch via the
-    streaming commit log; re-running with the same checkpoint resumes
-    with the state intact, so replays admit no duplicate."""
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
-    deduped = streaming_exact_dedup(stream, text_col, id_col)
-    writer = (deduped.writeStream.outputMode("append")
-              .format("parquet").option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def run_dedup_ingest(spark, landing_dir: str, out_dir: str,
+                     checkpoint_dir: str, schema: T.StructType,
+                     text_col: str = "text", id_col: str = "doc_id",
+                     timeout_s: float = 120):
+    """Drive the stateful dedup over available files to an append-only
+    parquet sink. Exactly-once per micro-batch via the streaming commit
+    log; re-running with the same checkpoint resumes with the state
+    intact, so replays admit no duplicate."""
+    return run_stream(
+        spark, landing_dir, schema,
+        lambda s: streaming_exact_dedup(s, text_col, id_col),
+        out_dir, checkpoint_dir, timeout_s)

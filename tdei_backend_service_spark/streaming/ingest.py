@@ -23,19 +23,16 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .run import drain
 from ..core.ingest import encode_cells
 from ..core.schema import IMAGES_SCHEMA
 
 
 def start_image_ingest(spark: SparkSession, landing_dir: str, table_dir: str,
-                       checkpoint_dir: str, manifest_path: str | None = None,
-                       trigger_once: bool = True):
-    """Stream parquet drops from ``landing_dir`` into the enriched images
-    table at ``table_dir``. Returns the StreamingQuery.
-
-    ``trigger_once`` processes everything available then stops (the
-    batch-parity mode used in tests); pass False for continuous
-    micro-batches.
+                       checkpoint_dir: str, manifest_path: str | None = None):
+    """Stream the parquet drops available under ``landing_dir`` into the
+    enriched images table at ``table_dir``. Returns the started
+    StreamingQuery, which stops once every available file is processed.
     """
     stream = (spark.readStream.schema(IMAGES_SCHEMA)
               .parquet(landing_dir))
@@ -50,20 +47,17 @@ def start_image_ingest(spark: SparkSession, landing_dir: str, table_dir: str,
             with open(manifest_path, "a") as f:
                 f.write(json.dumps(entry) + "\n")
 
-    writer = (stream.writeStream.foreachBatch(sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
 
 
 def ingest_available(spark: SparkSession, landing_dir: str, table_dir: str,
                      checkpoint_dir: str, manifest_path: str | None = None,
-                     timeout_s: int = 120) -> None:
-    """Synchronous convenience: process all available input then return."""
+                     timeout_s: float = 120):
+    """Synchronous convenience: process all available input, then return
+    the drained StreamingQuery (TimeoutError past ``timeout_s``)."""
     os.makedirs(table_dir, exist_ok=True)
-    q = start_image_ingest(spark, landing_dir, table_dir, checkpoint_dir,
-                           manifest_path, trigger_once=True)
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
+    return drain(start_image_ingest(spark, landing_dir, table_dir,
+                                    checkpoint_dir, manifest_path),
+                 timeout_s, table_dir)

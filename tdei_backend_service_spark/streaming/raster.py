@@ -20,8 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .state import stream_state_partitions
-
+from .run import run_stream
 from ..core import cells
 
 
@@ -47,23 +46,10 @@ def run_tile_counts(spark, landing_dir: str, out_dir: str,
                     checkpoint_dir: str, schema, z: int,
                     window_size: str = "1 hour",
                     watermark_delay: str = "30 minutes",
-                    timeout_s: int = 120) -> None:
+                    timeout_s: float = 120):
     """Drive the streaming tile aggregation over available files to a
     parquet sink (append mode: only watermark-sealed windows land)."""
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
-    with stream_state_partitions(spark):
-        q = (windowed_tile_counts(stream, z, window_size, watermark_delay)
-             .writeStream.outputMode("append").format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(timeout_s)
-    if q.isActive:
-        # an availableNow run that has not drained by the deadline means
-        # the sink is INCOMPLETE — stopping silently would surface as an
-        # under-count downstream, so fail loudly
-        q.stop()
-        raise TimeoutError(
-            f"streaming tile aggregation still active after {timeout_s}s "
-            f"— sink at {out_dir} is partial; raise timeout_s for this "
-            f"input size")
+    return run_stream(
+        spark, landing_dir, schema,
+        lambda s: windowed_tile_counts(s, z, window_size, watermark_delay),
+        out_dir, checkpoint_dir, timeout_s)

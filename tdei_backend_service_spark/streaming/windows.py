@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .state import stream_state_partitions
+from .run import run_stream
 
 
 def windowed_event_counts(stream: DataFrame, window_size: str = "1 hour",
@@ -39,26 +39,13 @@ def run_windowed_counts(spark, landing_dir: str, out_dir: str,
                         checkpoint_dir: str, schema,
                         window_size: str = "1 hour",
                         watermark_delay: str = "30 minutes",
-                        timeout_s: int = 120) -> None:
+                        timeout_s: float = 120):
     """Drive the windowed aggregation over available files to a parquet
     sink (append mode: only watermark-sealed windows land)."""
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
-    with stream_state_partitions(spark):
-        q = (windowed_event_counts(stream, window_size, watermark_delay)
-             .writeStream.outputMode("append").format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(timeout_s)
-    if q.isActive:
-        # an availableNow run that has not drained by the deadline means
-        # the sink is INCOMPLETE — stopping silently would surface as an
-        # under-count downstream, so fail loudly (ADVICE r3 low #4)
-        q.stop()
-        raise TimeoutError(
-            f"windowed aggregation still active after {timeout_s}s — "
-            f"sink at {out_dir} is partial; raise timeout_s for this "
-            f"input size")
+    return run_stream(
+        spark, landing_dir, schema,
+        lambda s: windowed_event_counts(s, window_size, watermark_delay),
+        out_dir, checkpoint_dir, timeout_s)
 
 
 def session_window_counts(stream: DataFrame, gap: str = "10 minutes",
@@ -92,20 +79,10 @@ def run_session_counts(spark, landing_dir: str, out_dir: str,
                        checkpoint_dir: str, schema,
                        gap: str = "10 minutes",
                        watermark_delay: str = "30 minutes",
-                       timeout_s: int = 120) -> None:
+                       timeout_s: float = 120):
     """Drive the session-window aggregation over available files to a
     parquet sink (append mode: only watermark-sealed sessions land)."""
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
-    with stream_state_partitions(spark):
-        q = (session_window_counts(stream, gap, watermark_delay)
-             .writeStream.outputMode("append").format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(
-            f"session-window aggregation still active after {timeout_s}s "
-            f"— sink at {out_dir} is partial; raise timeout_s for this "
-            f"input size")
+    return run_stream(
+        spark, landing_dir, schema,
+        lambda s: session_window_counts(s, gap, watermark_delay),
+        out_dir, checkpoint_dir, timeout_s)

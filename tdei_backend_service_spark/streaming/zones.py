@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .state import stream_state_partitions
+from .run import run_stream
 from ..core import cells, geom, route
 from ..core.join import COVER_INDEX_MAX_ENTRIES, build_cover_index
 from ..exceptions import InputException
@@ -147,22 +147,12 @@ def run_zone_counts(spark, landing_dir: str, out_dir: str,
                     zone_dataset_id: str | None = None,
                     window_size: str = "1 hour",
                     watermark_delay: str = "30 minutes",
-                    timeout_s: int = 120) -> None:
+                    timeout_s: float = 120):
     """Drive the streaming zone aggregation over available files to a
     parquet sink (append mode: only watermark-sealed windows land)."""
     zids = zone_membership_udf(spark, zones_df, zone_dataset_id)
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
-    with stream_state_partitions(spark):
-        q = (windowed_zone_counts(stream, zids, window_size,
-                                  watermark_delay)
-             .writeStream.outputMode("append").format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(
-            f"streaming zone aggregation still active after {timeout_s}s "
-            f"— sink at {out_dir} is partial; raise timeout_s for this "
-            f"input size")
+    return run_stream(
+        spark, landing_dir, schema,
+        lambda s: windowed_zone_counts(s, zids, window_size,
+                                       watermark_delay),
+        out_dir, checkpoint_dir, timeout_s)

@@ -75,43 +75,14 @@ def test_streaming_ingest_batches(spark, tmp_path):
     assert sum(e["rows"] for e in lines) == 150
 
 
-def test_stream_state_partitions_restores_under_overlap(spark):
-    """Two runs overlapping as A enters, B tries to enter, A exits,
-    B exits: the session value must come back, not the pinned 8 that B
-    would read as "old" if it entered while A was inside."""
-    import threading
-
-    from tdei_backend_service_spark.streaming.state import \
-        stream_state_partitions
-
-    key = "spark.sql.shuffle.partitions"
-    session = spark.conf.get(key)
-    spark.conf.set(key, "5")  # a value the block does not pin
-    a_in, a_go, b_in, b_go = (threading.Event() for _ in range(4))
-    errors = []
-
-    def run(entered, go):
-        try:
-            with stream_state_partitions(spark):
-                entered.set()
-                assert go.wait(10)
-        except Exception as e:  # surfaced in the main thread
-            errors.append(e)
-
-    a = threading.Thread(target=run, args=(a_in, a_go))
-    b = threading.Thread(target=run, args=(b_in, b_go))
-    a.start()
-    assert a_in.wait(10)
-    b.start()
-    b_in.wait(0.5)  # room for B to enter while A is inside, if it can
-    a_go.set()
-    a.join(10)
-    b_go.set()
-    b.join(10)
-    restored = spark.conf.get(key)
-    spark.conf.set(key, session)
-    assert not a.is_alive() and not b.is_alive() and not errors
-    assert restored == "5"
+def test_ingest_available_raises_on_partial_sink(spark, tmp_path):
+    """A run that has not drained by the deadline is stopped and raises:
+    returning normally would leave a partial table behind silently."""
+    landing = str(tmp_path / "landing")
+    synth_images_df(spark, 100, with_bytes=False).write.parquet(landing)
+    with pytest.raises(TimeoutError, match="partial"):
+        ingest_available(spark, landing, str(tmp_path / "table"),
+                         str(tmp_path / "ckpt"), timeout_s=0.001)
 
 
 def test_streaming_stateful_dedup(spark, tmp_path):
@@ -121,7 +92,7 @@ def test_streaming_stateful_dedup(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import types as T
 
-    from tdei_backend_service_spark.streaming.dedup import start_dedup_ingest
+    from tdei_backend_service_spark.streaming.dedup import run_dedup_ingest
 
     landing = str(tmp_path / "sland")
     out = str(tmp_path / "sdedup")
@@ -139,8 +110,7 @@ def test_streaming_stateful_dedup(spark, tmp_path):
     rows1 = [(i, f"document number {i} body") for i in range(10)]
     rows1.append((100, "  Document   NUMBER 0 body "))
     drop(rows1, "overwrite")
-    q = start_dedup_ingest(spark, landing, out, ckpt, schema)
-    q.awaitTermination(120)
+    run_dedup_ingest(spark, landing, out, ckpt, schema)
     got1 = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got1 == set(range(10))  # 100 collapsed into 0
 
@@ -148,8 +118,7 @@ def test_streaming_stateful_dedup(spark, tmp_path):
     rows2 = [(200 + i, f"document number {i} body") for i in range(5)]
     rows2 += [(i, f"document number {i} body") for i in range(10, 15)]
     drop(rows2, "append")
-    q = start_dedup_ingest(spark, landing, out, ckpt, schema)
-    q.awaitTermination(120)
+    run_dedup_ingest(spark, landing, out, ckpt, schema)
     got2 = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert got2 == set(range(15))  # state dropped the 200-series dups
 

@@ -47,7 +47,7 @@ def main() -> int:
     if FORCE_DISTRIBUTED:
         route.force_distributed()
 
-    spark = get_spark("oracle-check", cpus=8)
+    spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

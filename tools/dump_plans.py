@@ -312,7 +312,7 @@ def main() -> None:
     import __spark_entry__ as E
     from tdei_backend_service_spark.session import get_spark
 
-    spark = get_spark("plans", cpus=8)
+    spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
 

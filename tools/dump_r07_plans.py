@@ -5,8 +5,8 @@ suffix=before and from the final tree with suffix=after.
 
 Streaming queries are excluded: their returned frame is a batch read
 of the sink (building it would run the whole pipeline as a side
-effect), and the r07 streaming change is a conf scoped around the
-query start (streaming/state.py), not a plan-shape change.
+effect), and the r07 streaming change is the state-partition count a
+query starts with (streaming/run.py), not a plan-shape change.
 """
 
 from __future__ import annotations

@@ -52,7 +52,7 @@ def main() -> int:
     from pyspark.sql import functions as F, types as T
 
     from tdei_backend_service_spark.session import get_spark
-    from tdei_backend_service_spark.streaming.dedup import start_dedup_ingest
+    from tdei_backend_service_spark.streaming.dedup import run_dedup_ingest
 
     spark = get_spark("state-probe", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -73,9 +73,7 @@ def main() -> int:
     # drop 1: n distinct fingerprints, one file -> one micro-batch
     docs(0, n).coalesce(1).write.mode("overwrite").parquet(landing)
     t0 = time.time()
-    q = start_dedup_ingest(spark, landing, out, ckpt, schema)
-    q.awaitTermination(600)
-    assert not q.isActive, "drop 1 did not drain"
+    q = run_dedup_ingest(spark, landing, out, ckpt, schema, timeout_s=600)
     wall1 = time.time() - t0
     prog1 = _progress(q)
 
@@ -85,9 +83,7 @@ def main() -> int:
      .unionByName(docs(n, n + n_new))
      .coalesce(1).write.mode("append").parquet(landing))
     t0 = time.time()
-    q2 = start_dedup_ingest(spark, landing, out, ckpt, schema)
-    q2.awaitTermination(600)
-    assert not q2.isActive, "drop 2 did not drain"
+    q2 = run_dedup_ingest(spark, landing, out, ckpt, schema, timeout_s=600)
     wall2 = time.time() - t0
     prog2 = _progress(q2)
 
